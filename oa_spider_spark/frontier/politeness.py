@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cellrank import cell_offsets, cell_rank, desc_cell, quantize
 from ..config import DEFAULT_HOST_BUDGET
 
 
@@ -86,74 +87,35 @@ def apply_budget(
     )
 
 
-def global_order_and_limit(
-    df: DataFrame,
-    limit: int | None = None,
-    partitions: int | None = None,
-    subbuckets: int = 256,
-) -> DataFrame:
+def global_order_and_limit(df: DataFrame, limit: int | None = None) -> DataFrame:
     """Global deterministic order + optional round limit, with the fetch
     sequence number materialized as `fetch_order` (basis of the
     crawl-order equivalence tests).
 
-    A bare `Window.orderBy(...)` row_number would funnel every row through
-    ONE task — a non-starter at 10^10 frontier rows. And bucketing by the
-    leading sort key alone is not enough: with only ~100 priority values,
-    each in-bucket window is still ~1% of the frontier in ONE task.
-    So the rank is decomposed on the first TWO sort keys:
-
-      * `_b`  — the EXACT negated priority (ascending `_b` ≡ priority
-        DESC for any int domain — a clamped bucket would let an
-        out-of-range priority share a bucket with several values, and
-        the `_s` split below would then interleave them out of order);
-      * `_s`  — `created_ms` quantized into `subbuckets` ranges, negated
-        (the second key sorts DESC), so ascending (_b, _s) is a prefix of
-        the total order: rows in earlier cells outrank all later cells,
-        and the in-cell window re-sorts by the full key.
-
-    The offsets metadata frame is O(distinct priorities × subbuckets)
-    rows (~100 × 256 in practice — priorities are small ints by
-    convention, but correctness no longer depends on that).
-
-    Global rank = (broadcast) cell offset + in-cell row_number. Offsets
-    come from a groupBy(_b,_s) count + a running sum over that ≤100×
-    subbuckets-row METADATA frame (partition-less window over metadata is
-    fine; over data it never is). Per-cell work is ~1/(100·subbuckets) of
-    the frontier — bounded single-task sorts at any scale. The only
-    driver round-trip is a 2-value min/max bounds agg. The selection is
-    persisted so the bounds/count jobs and the rank job don't re-run the
+    A `cell_rank` (cellrank.py) on the first TWO sort keys: `_b` is the
+    EXACT negated priority (a clamped bucket would let several priority
+    values share a cell, and the `_s` split would interleave them), `_s`
+    the negated `quantize`d created_ms — a second-key split under one
+    first-key value. With ~100 priority values, a `_b`-only rank would
+    still sort ~1% of the frontier in one task. The only driver
+    round-trip is a 2-value min/max bounds agg; the selection is
+    persisted so the bounds job and the rank job don't re-run the
     upstream DAG."""
     from pyspark import StorageLevel
 
     inp = df.persist(StorageLevel.MEMORY_AND_DISK)
-    bucket = (-F.col("priority")).cast("long")
     bounds = inp.agg(F.min("created_ms").alias("lo"), F.max("created_ms").alias("hi")).collect()[0]
     lo = bounds["lo"] if bounds["lo"] is not None else 0
-    span = max(1, (bounds["hi"] - lo + 1) if bounds["hi"] is not None else 1)
-    q = max(1, span // subbuckets)
-    # NULL created_ms must not yield _s = NULL: the offsets equi-join would
-    # silently drop the row (null keys never match). Coalesce to `lo` — the
-    # row lands in the LAST ascending _s cell, and the in-cell full-key
-    # window sorts it after the real lo values (desc ⇒ nulls last), so the
-    # total order is preserved. Unreachable from normalize_frontier today,
-    # but a silent-data-loss trap for new frontier sources otherwise.
-    sub = -F.expr(f"(coalesce(created_ms, {lo}L) - {lo}L) div {q}L").cast("long")
-
-    keyed = inp.withColumn("_b", bucket).withColumn("_s", sub)
-    w_off = Window.orderBy("_b", "_s").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        keyed.groupBy("_b", "_s")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select("_b", "_s", "_off")
+    hi = bounds["hi"] if bounds["hi"] is not None else lo
+    # a NULL created_ms sorts last under DESC: it joins the last `_s`
+    # cell, where the full-key window puts it after the real values
+    keyed = inp.withColumn("_b", desc_cell("priority")).withColumn(
+        "_s", -quantize(f"coalesce(created_ms, {lo}L)", f"{lo}L", f"{hi}L")
     )
-
-    w = Window.partitionBy("_b", "_s").orderBy(*order_cols())
     out = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(offsets), ["_b", "_s"])
-        .withColumn("fetch_order", (F.col("_off") + F.col("_rn")).cast("int"))
-        .drop("_b", "_s", "_rn", "_off")
+        cell_rank(keyed, ["_b", "_s"], order_cols())
+        .withColumn("fetch_order", F.col("_rank").cast("int"))
+        .drop("_b", "_s", "_off", "_rank")
     )
     if limit is not None:
         out = out.filter(F.col("fetch_order") <= limit)
@@ -198,11 +160,8 @@ def budget_and_order(
     cnts = inp.groupBy(F.col("host"), bucket.alias("_b")).agg(
         F.count("*").alias("_n"), F.max("budget_per_round").alias("_bud")
     )
-    w_host = (
-        Window.partitionBy("host").orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    )
     budget = F.coalesce(F.col("_bud"), F.lit(default_budget)).cast("long")
-    cum_before = F.coalesce(F.sum("_n").over(w_host), F.lit(0))
+    cum_before = cell_offsets("_n", ["_b"], ["host"])
     takes = (
         cnts.withColumn("_take", F.least(F.col("_n"), F.greatest(budget - cum_before, F.lit(0))))
         .filter(F.col("_take") > 0)
@@ -210,11 +169,10 @@ def budget_and_order(
     )
 
     # global rank offsets over the SELECTED rows: ≤100-row running sum
-    w_glob = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         takes.groupBy("_b")
         .agg(F.sum("_take").alias("_sel"))
-        .withColumn("_off", F.coalesce(F.sum("_sel").over(w_glob), F.lit(0)))
+        .withColumn("_off", cell_offsets("_sel", ["_b"]))
         .select("_b", "_off")
     )
 
@@ -373,13 +331,10 @@ def rendezvous_shards(
     spilled-into shard may exceed cap by design, documented bound).
 
     Scale shape: scores/argmax are row-local array expressions. The
-    per-shard cumulative admission is NEVER a bare per-shard window
-    (K keys ⇒ 1/K of all hosts in one task): it reuses the frontier's
-    two-level decomposition (global_order_and_limit above) — quantized
-    score sub-buckets, per-cell weight sums running-summed over a
-    K x 256 METADATA window, in-cell running sum keyed by (shard,
-    cell). portable=True swaps xxhash64 for md5h60 so a DuckDB oracle
-    reproduces every score (CLAUDE.md trick); n_shards must be >= 2.
+    per-shard cumulative admission is a weighted `cell_rank` within
+    each shard (a bare per-shard window would put 1/K of all hosts in
+    one task). portable=True swaps xxhash64 for md5h60 so a DuckDB
+    oracle reproduces every score; n_shards must be >= 2.
     """
     from ..operators.dedup import md5h60
 
@@ -410,32 +365,16 @@ def rendezvous_shards(
         )
         .drop("_sc", "_second")
     )
-    # two-level bounded admission: trunc-div by a positive constant is
-    # weakly monotone (buckets are intervals) for signed xxhash64 too
+    # cell: trunc-div of the score by a positive constant is weakly
+    # monotone (cells are intervals) for signed xxhash64 too, ≤ 256 cells
     q = (1 << 52) if portable else (1 << 56)
     keyed = base.withColumn("_s", -F.expr(f"_best div {q}L"))
-    w_off = (
-        Window.partitionBy("primary_shard")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("primary_shard", "_s")
-        .agg(F.sum("_w").alias("_cw"))
-        .withColumn("_off", F.coalesce(F.sum("_cw").over(w_off), F.lit(0)))
-        .select("primary_shard", "_s", "_off")
-    )
-    w_in = (
-        Window.partitionBy("primary_shard", "_s")
-        .orderBy(F.col("_best").desc(), F.col("host").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    run = F.col("_off") + F.sum("_w").over(w_in)
+    order = [F.col("_best").desc(), F.col("host").asc()]
     return (
-        keyed.join(F.broadcast(offsets), ["primary_shard", "_s"])
+        cell_rank(keyed, ["_s"], order, part=["primary_shard"], weight="_w")
         .withColumn(
             "assigned_shard",
-            F.when(run <= cap, F.col("primary_shard")).otherwise(
+            F.when(F.col("_rank") <= cap, F.col("primary_shard")).otherwise(
                 F.col("secondary_shard")
             ),
         )
@@ -464,41 +403,21 @@ def fetch_timeline(
     between sequential fetches (time.sleep politeness); at fleet scale
     the sleep becomes a precomputed schedule column workers obey.
 
-    Scale shape: the per-host rank is NEVER a flat per-host window (a
-    hot host with 10^7 pending URLs would sort in one task): priorities
-    are monotonely coarsened into `div bucket_span` cells (clamp-style
-    coarsening is safe because in-cell windows order by the FULL key —
-    the budget_and_order precedent, CLAUDE.md), per-cell counts are
-    running-summed over a metadata-sized (host x cell) window, and the
-    in-cell row_number is keyed by (host, cell). Hosts absent from the
-    delays table get default_delay_ms (left join + coalesce); both
-    joins broadcast metadata-sized frames, so the only data shuffle is
-    the (host, cell) window exchange."""
+    Scale shape: the per-host rank is a `cell_rank` within each host (a
+    hot host with 10^7 pending URLs would otherwise sort in one task).
+    Cell: the priority `div bucket_span` — trunc-div by a positive
+    constant is monotone and keeps NULL priorities first, as ASC does.
+    Hosts absent from the delays table get default_delay_ms (left
+    join + coalesce against a broadcast delays frame)."""
     s = selected.select(
         F.col(host_col).alias("host"),
         F.col(url_col).alias("url"),
         F.col(order_col).cast("long").alias("_o"),
     )
     keyed = s.withColumn("_b", F.expr(f"_o div {int(bucket_span)}L"))
-    w_off = (
-        Window.partitionBy("host")
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("host", "_b")
-        .agg(F.count("*").alias("_c"))
-        .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-        .select("host", "_b", "_off")
-    )
-    w_in = Window.partitionBy("host", "_b").orderBy(
-        F.col("_o").asc(), F.col("url").asc()
-    )
-    slotted = (
-        keyed.join(F.broadcast(offsets), ["host", "_b"])
-        .withColumn(
-            "slot", (F.col("_off") + F.row_number().over(w_in) - 1).cast("long")
-        )
+    order = [F.col("_o").asc(), F.col("url").asc()]
+    slotted = cell_rank(keyed, ["_b"], order, part=["host"]).withColumn(
+        "slot", (F.col("_rank") - 1).cast("long")
     )
     d = delays.select(
         F.col(host_col).alias("host"),
@@ -636,39 +555,22 @@ def byte_budget_select(
     runs when the constraint is egress, not URL count (O4's budget caps
     rows; this caps bytes, and X72/X97's size estimates feed it).
 
-    Scale shape: the global running sum is NEVER one flat window —
-    the order key decomposes into (exact negated priority × url
-    PREFIX) cells: a string prefix is a monotone coarsening of the
-    url order, so in-cell running sums over the FULL url key compose
-    with cell offsets from a metadata-sized window exactly as in
-    global_order_and_limit / rendezvous_shards (the budget_and_order
-    clamp precedent, CLAUDE.md). Output: every candidate with its
-    cumulative position and the admission verdict."""
+    Scale shape: the global running sum is a weighted `cell_rank`.
+    Cell: (exact negated priority, url PREFIX) — a prefix split under
+    one priority value, and a string prefix is a monotone coarsening of
+    the url order. Output: every candidate with its cumulative position
+    and the admission verdict."""
     keyed = candidates.select(
         F.col(url_col).alias("url"),
         F.col(prio_col).cast("long").alias("priority"),
         F.col(bytes_col).cast("long").alias("est_bytes"),
-        (-F.col(prio_col).cast("long")).alias("_p"),
+        desc_cell(prio_col).alias("_p"),
         F.substring(F.col(url_col), 1, prefix_len).alias("_pre"),
     )
-    w_off = (
-        Window.orderBy("_p", "_pre")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        keyed.groupBy("_p", "_pre")
-        .agg(F.sum("est_bytes").alias("_cw"))
-        .withColumn("_off", F.coalesce(F.sum("_cw").over(w_off), F.lit(0)))
-        .select("_p", "_pre", "_off")
-    )
-    w_in = (
-        Window.partitionBy("_p", "_pre")
-        .orderBy("url")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    order = [F.col("priority").desc(), F.col("url").asc()]
     return (
-        keyed.join(F.broadcast(offsets), ["_p", "_pre"])
-        .withColumn("cum_bytes", F.col("_off") + F.sum("est_bytes").over(w_in))
+        cell_rank(keyed, ["_p", "_pre"], order, weight="est_bytes")
+        .withColumn("cum_bytes", F.col("_rank"))
         .withColumn("selected", F.col("cum_bytes") <= budget_bytes)
         .select("url", "priority", "est_bytes", "cum_bytes", "selected")
     )

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cellrank import cell_rank
+
 
 def md5h60(col):
     """Portable 60-bit hash: first 15 hex chars of md5, as a non-negative
@@ -785,17 +787,12 @@ def sorted_neighborhood_pairs(
 
     Scale shape — the two classic quadratic/serial hazards are avoided:
 
-    * No partition-less Window over data for the global sort position.
-      The rank is decomposed exactly like the frontier's
-      `global_order_and_limit` (politeness.py): cell = the key's first
-      two characters (ascending (_b, _s) is a prefix of the ascending
-      (key, id) total order because cells partition the LEXICOGRAPHIC
-      range), per-cell offsets from a running sum over the <= |alphabet|^2
-      -row METADATA frame, in-cell row_number over the full key. After
-      the normalize below the alphabet is [a-z0-9 ] ⇒ <= ~1.4k cells,
-      each ~1/1.4k of the corpus: bounded single-task sorts at any
-      scale. (Adversarially hot 2-char prefixes extend the same split a
-      character deeper — monotone prefix refinement.)
+    * The global sort position is a `cell_rank`. Cell: the key's first
+      two characters — cells partition the LEXICOGRAPHIC range, so a
+      prefix is a monotone coarsening of (key, id). After the normalize
+      below the alphabet is [a-z0-9 ] ⇒ <= ~1.4k cells. (Adversarially
+      hot 2-char prefixes extend the same split a character deeper —
+      monotone prefix refinement.)
     * No self-join fan-out beyond 2×: neighbor candidates join on
       block g = (rank-1) div window, the right side duplicated onto
       {g, g-1}, then 0 < rank_b - rank_a < window — each pair matches
@@ -816,19 +813,8 @@ def sorted_neighborhood_pairs(
     cells = keyed.withColumn("_b", F.substring("_key", 1, 1)).withColumn(
         "_s", F.substring("_key", 2, 1)
     )
-    w_off = Window.orderBy("_b", "_s").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        cells.groupBy("_b", "_s")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select("_b", "_s", "_off")
-    )
-    w_cell = Window.partitionBy("_b", "_s").orderBy("_key", "_id")
-    ranked = (
-        cells.withColumn("_rn", F.row_number().over(w_cell))
-        .join(F.broadcast(offsets), ["_b", "_s"])
-        .withColumn("_r", (F.col("_off") + F.col("_rn")).cast("long"))
-        .select("_id", "_key", "_r")
+    ranked = cell_rank(cells, ["_b", "_s"], [F.col("_key"), F.col("_id")]).select(
+        "_id", "_key", F.col("_rank").cast("long").alias("_r")
     )
     a = ranked.select(
         F.col("_id").alias("doc_a"),
@@ -1222,34 +1208,27 @@ def threshold_sweep(
     single-clustering audit). Exact integer milli P/R.
 
     Plan: one full-outer join of scored pairs to truth on the pair key
-    (both sides pair-cardinality, tiny next to the corpus), then ONE
-    aggregate per threshold via conditional sums over the literal
-    threshold list — the scored table is scanned once, never once per
-    threshold. Output: (threshold, n_predicted, n_truth, tp,
-    precision_milli, recall_milli) rows."""
+    (both sides pair-cardinality, tiny next to the corpus), each joined
+    row exploded over the literal threshold list, then ONE groupBy
+    threshold of conditional sums (the oracle's CROSS JOIN shape) — the
+    join is evaluated once, never once per threshold. Output:
+    (threshold, n_predicted, n_truth, tp, precision_milli,
+    recall_milli) rows."""
     t = truth.select(*key_cols).withColumn("_is_true", F.lit(1))
     j = pairs.select(*key_cols, score_col).join(t, list(key_cols), "full_outer")
-    rows = []
-    for thr in thresholds:
-        pred = F.col(score_col) >= thr
-        rows.append(
-            j.agg(
-                F.lit(int(thr)).alias("threshold"),
-                F.sum(F.coalesce(pred.cast("long"), F.lit(0))).alias(
-                    "n_predicted"
-                ),
-                F.sum(F.coalesce(F.col("_is_true"), F.lit(0))).alias("n_truth"),
-                F.sum(
-                    F.coalesce(
-                        (pred & F.col("_is_true").isNotNull()).cast("long"),
-                        F.lit(0),
-                    )
-                ).alias("tp"),
-            )
+    thr = F.explode(F.array(*[F.lit(int(x)) for x in thresholds]))
+    pred = F.col(score_col) >= F.col("threshold")
+    out = (
+        j.select(thr.alias("threshold"), score_col, "_is_true")
+        .groupBy("threshold")
+        .agg(
+            F.sum(F.coalesce(pred.cast("long"), F.lit(0))).alias("n_predicted"),
+            F.sum(F.coalesce(F.col("_is_true"), F.lit(0))).alias("n_truth"),
+            F.sum(
+                F.coalesce((pred & F.col("_is_true").isNotNull()).cast("long"), F.lit(0))
+            ).alias("tp"),
         )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
+    )
     return out.select(
         "threshold",
         F.col("n_predicted").cast("long").alias("n_predicted"),

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cellrank import cell_rank, desc_cell, quantize
 from .dedup import md5h60
 
 
@@ -398,7 +399,6 @@ def systematic_weighted_sample(
     weight_col: str = "n_chars",
     k: int = 100,
     order_col: str = "doc_id",
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Exactly-k systematic PPS sample: row i gets
     ``n_picks = floor(k·cum_i/W) − floor(k·cum_{i−1}/W)`` picks, where
@@ -413,46 +413,23 @@ def systematic_weighted_sample(
     rejected for the oracle surface: ln/pow rounding is not bit-stable
     across engines, and near-tie keys would then flip sample membership.
 
-    Scale shape: the cumulative sum is the repo's two-level bucketed
-    pattern (global_order_and_limit's) — per-range-bucket totals, a
-    running-sum window over the ≤n_buckets METADATA rows (partition-less
-    over metadata is fine; over data it never is), broadcast offsets
-    back, in-bucket windows partitioned by bucket. One groupBy shuffle +
-    one bucket-partitioned window; no global sort, no single-task
-    window. The only driver round-trip is a 2-value min/max bounds agg.
+    Scale shape: the cumulative sum is a weighted `cell_rank`. Cell:
+    the `quantize`d order key — a range split is a monotone coarsening
+    of it. The only driver round-trip is one bounds agg (min, max and
+    the grand total W).
     """
-    from pyspark.sql import Window
-
     w = F.coalesce(F.col(weight_col), F.lit(0)).cast("long")
-    bounds = df.agg(
-        F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
+    b = df.agg(
+        F.min(order_col).alias("lo"), F.max(order_col).alias("hi"), F.sum(w).alias("tot")
     ).collect()[0]
-    lo = bounds["lo"] if bounds["lo"] is not None else 0
-    span = max(1, (bounds["hi"] - lo + 1) if bounds["hi"] is not None else 1)
-    width = max(1, -(-span // n_buckets))  # ceil
-    data = df.select(
-        order_col, F.col(weight_col), w.alias("_w")
-    ).withColumn("_b", ((F.col(order_col) - F.lit(lo)) / F.lit(width)).cast("long"))
-    btot = data.groupBy("_b").agg(F.sum("_w").alias("_bw"))
-    w_off = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
+    lo = b["lo"] if b["lo"] is not None else 0
+    hi = b["hi"] if b["hi"] is not None else lo
+    tot = b["tot"] or 0
+    data = df.select(order_col, F.col(weight_col), w.alias("_w")).withColumn(
+        "_b", quantize(order_col, f"{lo}L", f"{hi}L")
     )
-    offsets = btot.select(
-        "_b",
-        F.coalesce(F.sum("_bw").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_bw").over(w_all).alias("_tot"),
-    )
-    w_in = (
-        Window.partitionBy("_b")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (F.col("_off") + F.sum("_w").over(w_in)).alias("_cum")
-    picks = data.join(F.broadcast(offsets), "_b").select(
-        order_col, weight_col, "_w", "_tot", cum
-    )
-    n_picks = F.expr(f"({k} * _cum) div _tot - ({k} * (_cum - _w)) div _tot")
+    picks = cell_rank(data, ["_b"], [F.col(order_col)], weight="_w")
+    n_picks = F.expr(f"({k} * _rank) div {tot} - ({k} * (_rank - _w)) div {tot}")
     return (
         picks.withColumn("n_picks", n_picks.cast("long"))
         .filter(F.col("n_picks") >= 1)
@@ -912,37 +889,25 @@ def dense_vocab_ids(
     ids and only unseen terms append after max(vid), ranked among
     themselves — growing the corpus can only extend the table.
 
-    Scale shape: the global rank is the two-level cell decomposition
-    (exact negated df × term PREFIX — a prefix is a monotone coarsening
-    of the term order, so the df=1 long tail spreads across prefix
-    cells instead of one giant window task); the append base rides a
-    broadcast one-row max, never a driver collect."""
+    Scale shape: the global rank is a `cell_rank`. Cell: (exact
+    negated df, term PREFIX) — a prefix split under one df value, so the
+    df=1 long tail spreads across prefix cells instead of one giant
+    window task. The append base rides a broadcast one-row max, never a
+    driver collect."""
 
     def _ranked(df0: DataFrame, base_col) -> DataFrame:
         extra = [F.col("_mx")] if "_mx" in df0.columns else []
         keyed = df0.select(
             F.col(term_col).alias("term"),
             F.col(df_col).cast("long").alias("df"),
-            (-F.col(df_col).cast("long")).alias("_d"),
+            desc_cell(df_col).alias("_d"),
             F.substring(F.col(term_col), 1, prefix_len).alias("_pre"),
             *extra,
         )
-        w_off = Window.orderBy("_d", "_pre").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = (
-            keyed.groupBy("_d", "_pre")
-            .agg(F.count("*").alias("_c"))
-            .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-            .select("_d", "_pre", "_off")
-        )
-        w_in = Window.partitionBy("_d", "_pre").orderBy("term")
+        order = [F.col("df").desc(), F.col("term").asc()]
         return (
-            keyed.join(F.broadcast(offsets), ["_d", "_pre"])
-            .withColumn(
-                "vid",
-                base_col + F.col("_off") + F.row_number().over(w_in) - 1,
-            )
+            cell_rank(keyed, ["_d", "_pre"], order)
+            .withColumn("vid", base_col + F.col("_rank") - 1)
             .select("term", "df", "vid")
         )
 
@@ -1331,7 +1296,6 @@ def grouped_topk(
     score_col: str,
     id_col: str,
     k: int = 5,
-    subbuckets: int = 256,
 ) -> DataFrame:
     """Generic scale-safe grouped top-k BY SCORE — the primitive behind
     "best k pages per host", "top k images per phash cluster", "highest
@@ -1342,17 +1306,15 @@ def grouped_topk(
     extracts the frontier's two-level decomposition into the general
     form).
 
-    Fully relational, zero driver collects: per-GROUP score bounds
-    (one aggregate, joined back — not collected), scores quantized
-    into ≤subbuckets cells per group, per-cell counts running-summed
-    over a (group × cells) metadata window partitioned by group. Cells
-    whose offset already reaches k are DISCARDED BEFORE any window —
-    the below-cutoff mass of a hot group is never sorted — and the
-    surviving boundary cells get in-cell row_numbers over ~1/subbuckets
-    of their group. Degenerate case: a group whose scores are all
-    equal collapses to one cell and that cell's tie-break sort is one
-    task of the group's size — inherent to exact ties, the same bound
-    the knn/extract_tables windows document.
+    Fully relational, zero driver collects: a `cell_rank` within each
+    group. Cell: the score `quantize`d between per-GROUP bounds (one
+    aggregate, joined back — not collected). The `_off < k` filter is
+    pushed to the cell frame, so cells whose offset already reaches k
+    are DISCARDED BEFORE the join and the window — the below-cutoff
+    mass of a hot group is never sorted. Degenerate case: a group whose
+    scores are all equal collapses to one cell and that cell's
+    tie-break sort is one task of the group's size — inherent to exact
+    ties, the same bound the knn/extract_tables windows document.
 
     Output: group_cols + (id_col, score_col, rank), rank 1..k per
     group by (score DESC, id ASC)."""
@@ -1361,26 +1323,13 @@ def grouped_topk(
         F.min(score_col).alias("_lo"), F.max(score_col).alias("_hi")
     )
     j = df.join(bounds, g)
-    # integer div on NAMED columns (float '/' then cast is not floor
-    # division cross-engine — the repo-wide discipline)
+    # a NULL score sorts last under DESC: it joins the last cell
     keyed = j.withColumn(
-        "_q", F.expr(f"greatest((_hi - _lo + 1) div {int(subbuckets)}, 1)")
-    ).withColumn("_s", F.expr(f"-(({score_col} - _lo) div _q)"))
-    w_off = Window.partitionBy(*g).orderBy("_s").rowsBetween(
-        Window.unboundedPreceding, -1
+        "_s", -quantize(f"coalesce({score_col}, _lo)", "_lo", "_hi")
     )
-    offsets = (
-        keyed.groupBy(*g, "_s")
-        .agg(F.count("*").alias("_n"))
-        .withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-        .select(*g, "_s", "_off")
-    )
-    survivors = keyed.join(offsets, [*g, "_s"]).filter(F.col("_off") < k)
-    w_in = Window.partitionBy(*g, "_s").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
-    )
+    order = [F.col(score_col).desc(), F.col(id_col).asc()]
     return (
-        survivors.withColumn("rank", F.col("_off") + F.row_number().over(w_in))
-        .filter(F.col("rank") <= k)
-        .select(*g, id_col, score_col, F.col("rank").cast("long").alias("rank"))
+        cell_rank(keyed, ["_s"], order, part=g)
+        .filter((F.col("_off") < k) & (F.col("_rank") <= k))
+        .select(*g, id_col, score_col, F.col("_rank").cast("long").alias("rank"))
     )

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cellrank import cell_rank, quantize
+
 # tiny stopword list for quality scoring (deterministic, language-neutral
 # enough for synthetic data)
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -279,8 +281,6 @@ def tfidf_top_terms(docs: DataFrame, text_col: str = "text", k: int = 3) -> Data
         .crossJoin(F.broadcast(n))
         .withColumn("score_milli", F.expr("(tf * 1000 * n_docs) div df").cast("long"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("score_milli"), F.asc("term")
     )
@@ -977,42 +977,39 @@ def fluency_buckets(
     hard-dropping the rest. Works on any per-doc integer score —
     X67's bigram fluency is the in-repo model.
 
-    The global rank is the repo's two-level cell decomposition
-    (dense_vocab_ids' template): cells keyed by the EXACT negated
-    score × an id-prefix (monotone coarsening of the tie-break, so a
-    mass of equal scores spreads across prefix cells instead of one
-    giant window task); offsets from a metadata-sized window over cell
-    counts; in-cell row_number by id. Buckets by integer thirds:
-    rank·3 ≤ n → head, ≤ 2n → middle, else tail — exact on both
-    engines, no percentile estimation anywhere.
+    The global rank is a `cell_rank`. Cell: the negated score
+    `quantize`d between global bounds (NULL scores in a last cell of
+    their own), sub-split by the `quantize`d id only where every score
+    in the cell is equal — a second-key split keeps the order only
+    under a single first-key value. So a mass of tied scores spreads
+    over id cells instead of one window task. Buckets by integer
+    thirds: rank·3 ≤ n → head, ≤ 2n → middle, else tail — exact on
+    both engines, no percentile estimation anywhere.
 
     Output: (id_col, score_col, rank, bucket)."""
-    keyed = scored.select(
-        F.col(id_col).alias("_id"),
-        F.col(score_col).cast("long").alias("_s"),
-        (-F.col(score_col).cast("long")).alias("_d"),
-        F.expr(f"{id_col} div 256").alias("_pre"),
+    b = scored.agg(
+        F.min(score_col).cast("long").alias("_lo"),
+        F.max(score_col).cast("long").alias("_hi"),
+        F.min(id_col).alias("_ilo"),
+        F.max(id_col).alias("_ihi"),
+        F.count("*").cast("long").alias("_n"),
     )
-    w_off = Window.orderBy("_d", "_pre").rowsBetween(
-        Window.unboundedPreceding, -1
+    keyed = (
+        scored.select(
+            F.col(id_col).alias("_id"), F.col(score_col).cast("long").alias("_s")
+        )
+        .crossJoin(F.broadcast(b))
+        .withColumn("_c", F.coalesce(-quantize("_s", "_lo", "_hi"), F.lit(1)))
     )
-    offsets = (
-        keyed.groupBy("_d", "_pre")
-        .agg(F.count("*").alias("_c"))
-        .withColumn("_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0)))
-        .select("_d", "_pre", "_off")
+    flat = keyed.groupBy("_c").agg(F.expr("min(_s) <=> max(_s)").alias("_flat"))
+    keyed = keyed.join(F.broadcast(flat), "_c").withColumn(
+        "_i", F.when(F.col("_flat"), quantize("_id", "_ilo", "_ihi")).otherwise(0)
     )
-    w_in = Window.partitionBy("_d", "_pre").orderBy("_id")
-    n = scored.agg(F.count("*").cast("long").alias("_n"))
-    ranked = (
-        keyed.join(F.broadcast(offsets), ["_d", "_pre"])
-        .withColumn("rank", F.col("_off") + F.row_number().over(w_in))
-        .crossJoin(F.broadcast(n))
-    )
-    return ranked.select(
+    order = [F.col("_s").desc(), F.col("_id").asc()]
+    return cell_rank(keyed, ["_c", "_i"], order).select(
         F.col("_id").alias(id_col),
         F.col("_s").alias(score_col),
-        F.col("rank").cast("long").alias("rank"),
+        F.col("_rank").cast("long").alias("rank"),
         F.when(F.col("rank") * 3 <= F.col("_n"), "head")
         .when(F.col("rank") * 3 <= F.col("_n") * 2, "middle")
         .otherwise("tail")

@@ -1416,6 +1416,19 @@ def test_threshold_sweep_exact_counts(spark):
     assert r8["precision_milli"] == 1000 and r8["recall_milli"] == 333
 
 
+def test_threshold_sweep_joins_once(spark):
+    """The scored join is evaluated once for all thresholds: one join in
+    the plan, exploded over the threshold literals before one groupBy."""
+    from oa_spider_spark.operators.dedup import threshold_sweep
+
+    pairs = spark.createDataFrame([(1, 2, 900)], "doc_a long, doc_b long, score_milli long")
+    truth = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    out = threshold_sweep(pairs, truth)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join FullOuter") == 1, plan
+    assert out.count() == 5
+
+
 def test_fluency_buckets_thirds_and_rank(spark):
     """Exact thirds with deterministic tie-breaks; rank is the true
     global (score desc, id asc) position; bucket sizes follow the

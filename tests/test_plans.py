@@ -4,6 +4,8 @@ column pruning reaches the parquet scan, the global crawl order is a
 range-partitioned distributed sort (never a single-task window), and the
 seen anti-join + hosts join pick the intended strategies."""
 
+import ast
+import pathlib
 import re
 
 from pyspark.sql import functions as F
@@ -46,7 +48,7 @@ def test_global_order_is_bucketed_not_single_task(spark):
     window is ~1% of the frontier in ONE task). Every data window must
     partition by the (_b, _s) cell, and cells must be bounded."""
     f = datagen.seed_frontier_df(spark, 2000, n_hosts=6, hot_share=0.4)
-    out = global_order_and_limit(f, None, partitions=4)
+    out = global_order_and_limit(f, None)
     out.collect()
     plan = plan_of(out)
     # every data row_number window must carry the 2-level cell spec
@@ -207,3 +209,57 @@ def test_global_order_correct_for_out_of_range_priorities(spark):
     cache = getattr(out, "_ordered_cache", None)
     if cache is not None:
         cache.unpersist()
+
+
+# Partition-less windows whose input is already cut to limit(k) rows,
+# and the per-language metadata frame of temperature_targets.
+_UNPARTITIONED_OK = {
+    ("queries.py", "q_crawl_select"),
+    ("queries.py", "q_topk_priority"),
+    ("queries.py", "q_cosine_topk"),
+    ("queries_dedup.py", "q_ivf_ann"),
+    ("operators/similarity.py", "_ranked_topk"),
+    ("operators/pipeline.py", "temperature_targets"),
+}
+
+
+def _unpartitioned_windows(path: pathlib.Path):
+    """(enclosing function, line) of every `Window.orderBy(...)`,
+    `Window.rowsBetween/rangeBetween(...)` or `Window.partitionBy()`."""
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from visit(child, child.name)
+                continue
+            f = getattr(child, "func", None)
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "Window"
+                and (
+                    f.attr in ("orderBy", "rowsBetween", "rangeBetween")
+                    or (f.attr == "partitionBy" and not child.args)
+                )
+            ):
+                yield fn, child.lineno
+            yield from visit(child, fn)
+
+    yield from visit(ast.parse(path.read_text()), None)
+
+
+def test_no_partitionless_window_outside_cell_rank():
+    """A partition-less Window runs in ONE task. Over data it may appear
+    only in cellrank.py (which runs it over the cell frame) and in the
+    allow-listed functions above."""
+    root = pathlib.Path(entry_mod.__file__).parent / "oa_spider_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "cellrank.py":
+            continue
+        for fn, line in _unpartitioned_windows(path):
+            if (rel, fn) not in _UNPARTITIONED_OK:
+                bad.append(f"{rel}:{line} in {fn}")
+    assert not bad, "partition-less Window outside cell_rank: " + ", ".join(bad)
