@@ -349,10 +349,10 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "throughput": throughput,
-                # per-phase seconds of the crawl round (select = eager
-                # budget/rank metadata work; fetch_stage = Arrow fetch +
+                # per-phase seconds of the crawl round (select = plan
+                # building; fetch_stage = selection + Arrow fetch +
                 # staging write; derived_stage = links/retries/seen/
-                # lineage writes; commit_totals = commit + lineage agg)
+                # lineage writes; commit = the commit-log append)
                 "crawl_phases": phases,
                 # host-noise-free engine evidence: task-balance of the
                 # crawl round's stages (pareff = engine-side scaling

@@ -24,11 +24,12 @@ Universe shape:
 from __future__ import annotations
 
 import zlib
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 
 import numpy as np
+import pyarrow as pa
 
-from .kernels.codec import average_hash, encode_image
+from .kernels.codec import average_hash_canvas, encode_canvas
 
 GLOBAL_SEED = 42
 
@@ -196,99 +197,210 @@ class FetchResult:
     reason: str = ""     # '' (ok) | 'transient' | 'timeout' | 'connect_error'
 
 
-def synth_caption(seed: int) -> str:
-    """Caption with CJK + filename-hostile chars (FIXTURES.md §1).
+# Images are synthesized on one padded CANVAS × CANVAS canvas per chunk
+# of at most CHUNK_ROWS ok rows (~16 KB of float32 per row while it is
+# built), so a worker's memory stays flat whatever the Arrow batch size.
+CANVAS = 64  # largest image side: 24 + 40
+CHUNK_ROWS = 256
 
-    PCG64, not RandomState: MT19937's 624-word seeding (~90 µs) dominated
-    the per-URL synthetic fetch — 3 RNG inits per URL were 27% of fetch
-    cost. The char draw is one vectorized integers() call."""
-    rng = np.random.Generator(np.random.PCG64(seed))
-    # ONE raw draw covers every decision (each integers() call costs
-    # ~10 µs of Generator overhead — they were ~15% of fetch cost):
-    # [0]=len, [1]=messy count, [2:4]=messy picks, [4:6]=positions,
-    # [6:]=caption chars
-    raw = rng.integers(0, 1 << 32, size=6 + 13)
-    n = 6 + int(raw[0] % 8)
-    chars = [_CJK[int(j % len(_CJK))] for j in raw[6 : 6 + n]]
-    # sprinkle 0-2 forbidden chars to exercise clean_filename
-    for k in range(int(raw[1] % 3)):
-        pos = int(raw[4 + k] % (len(chars) + 1))
-        chars.insert(pos, _MESSY[int(raw[2 + k] % len(_MESSY))])
-    return f"doc{seed % 100000} " + "".join(chars)
+_CJK_CODES = np.array([ord(c) for c in _CJK], dtype=np.uint32)
+_CAPTION_CHARS = 13  # 6 + up to 7
 
 
-def synth_image(seed: int):
-    """Deterministic greyscale test pattern: gradient + sinusoid + noise.
-    Smooth enough to quantize within the PSNR gate, unique per seed."""
-    # h/w from mixed seed bits directly (no Generator overhead), noise in
-    # ONE vector draw. The multiplicative mix matters: raw low bits of
-    # SMALL SEQUENTIAL seeds (test fixtures) are correlated — unmixed,
-    # every fixture image collapsed to one width.
-    m = (seed * 2654435761) & 0xFFFFFFFF
-    h = 24 + m % 41
-    w = 24 + (m >> 8) % 41
-    rng = np.random.Generator(np.random.PCG64(seed))
-    # the sinusoid varies along x only — compute it on one row and
-    # broadcast (same doubles as the full-grid form, w sins not h*w)
-    row = 100.0 + 80.0 * np.sin(np.arange(w, dtype=np.float64) / (3 + seed % 7) + seed % 11)
-    col = 60.0 * (np.arange(h, dtype=np.float64) / h)
-    img = row[None, :] + col[:, None] + rng.integers(-10, 11, (h, w))
-    return np.clip(img, 0, 255).astype(np.uint8)
+def _seeds_of(url_canons) -> np.ndarray:
+    """`_seed_of` over a sequence of canonical URLs → int64 array."""
+    return np.fromiter(
+        ((zlib.crc32(u.encode("utf-8")) ^ GLOBAL_SEED) & 0x7FFFFFFF for u in url_canons),
+        dtype=np.int64, count=len(url_canons),
+    )
+
+
+def _draws(seeds: np.ndarray, stream: int, k: int) -> np.ndarray:
+    """(n, k) uint64 draws: splitmix64 over the counter (seed, stream, j).
+    Counter-based, so a row's draws never depend on the other rows of its
+    batch, and one vector op replaces a Generator init per URL."""
+    x = (seeds.astype(np.uint64)[:, None] << np.uint64(32)) | np.uint64(stream << 24)
+    x = x | np.arange(k, dtype=np.uint64)[None, :]
+    x += np.uint64(0x9E3779B97F4A7C15)
+    x ^= x >> np.uint64(30)
+    x *= np.uint64(0xBF58476D1CE4E5B9)
+    x ^= x >> np.uint64(27)
+    x *= np.uint64(0x94D049BB133111EB)
+    x ^= x >> np.uint64(31)
+    return x
+
+
+def _dims(seeds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(h, w) in 24..64 from mixed seed bits. The multiplicative mix
+    matters: raw low bits of SMALL SEQUENTIAL seeds (test fixtures) are
+    correlated — unmixed, every fixture image collapsed to one width.
+    Oracle SQL (queries_media.py) recomputes these dims relationally."""
+    m = (seeds * 2654435761) & 0xFFFFFFFF
+    return 24 + m % 41, 24 + (m >> 8) % 41
+
+
+def _canvas(seeds: np.ndarray) -> np.ndarray:
+    """(n, CANVAS, CANVAS) uint8: image i is `[i, :h_i, :w_i]` of a
+    deterministic greyscale test pattern (gradient + sinusoid + noise),
+    smooth enough to quantize within the PSNR gate, unique per seed."""
+    n = len(seeds)
+    h, _ = _dims(seeds)
+    x = np.arange(CANVAS, dtype=np.float64)
+    # the sinusoid varies along x only, the gradient along y only
+    row = 100.0 + 80.0 * np.sin(x[None, :] / (3 + seeds % 7)[:, None] + (seeds % 11)[:, None])
+    col = 60.0 * (x[None, :] / h[:, None])
+    img = row.astype(np.float32)[:, None, :] + col.astype(np.float32)[:, :, None]
+    # noise in -10..10: eight draws per 64-bit word, each byte scaled to 0..20
+    words = _draws(seeds, 0, CANVAS * CANVAS // 8).astype("<u8", copy=False)
+    noise = ((words.view(np.uint8).astype(np.uint16) * 21) >> 8).astype(np.int8) - 10
+    img += noise.reshape(n, CANVAS, CANVAS)
+    return np.clip(img, 0, 255, out=img).astype(np.uint8)
+
+
+def _captions(seeds: np.ndarray) -> list[str]:
+    """Captions with CJK + filename-hostile chars (FIXTURES.md §1): 6-13
+    CJK chars, then 0-2 chars from _MESSY inserted to exercise
+    clean_filename. The char draw is one array op; only the insertions
+    and the string assembly run per row."""
+    raw = _draws(seeds, 1, 6 + _CAPTION_CHARS)
+    # [0]=len, [1]=messy count, [2:4]=messy picks, [4:6]=positions, [6:]=chars
+    n_chars = 6 + raw[:, 0] % 8
+    codes = _CJK_CODES[raw[:, 6:] % len(_CJK)]
+    codes[np.arange(_CAPTION_CHARS)[None, :] >= n_chars[:, None]] = 0  # NUL-padded
+    bodies = np.ascontiguousarray(codes).view(f"<U{_CAPTION_CHARS}").ravel().tolist()
+    n_messy = (raw[:, 1] % 3).tolist()
+    picks = (raw[:, 2:4] % len(_MESSY)).tolist()
+    positions = raw[:, 4:6].tolist()
+    out = []
+    for seed, text, m, pick, pos in zip(seeds.tolist(), bodies, n_messy, picks, positions):
+        for j in range(m):
+            at = pos[j] % (len(text) + 1)
+            text = text[:at] + _MESSY[pick[j]] + text[at:]
+        out.append(f"doc{seed % 100000} {text}")
+    return out
+
+
+def _link_host(url_canon: str) -> str:
+    """Host of a `http://<host>/<kind>/<n>` URL, h000 for any other shape."""
+    try:
+        parts = url_canon.split("://", 1)[1].split("/")
+        int(parts[2])
+        return parts[0]
+    except (IndexError, ValueError):
+        return "h000.example.org"
+
+
+def _links(seeds: np.ndarray, url_canons: list[str], n_hosts: int) -> list[list[str]]:
+    """0-3 outlinks per page, 80% on the page's own host (link extraction
+    analog of the parser fan-out, oa.py:583-586); depth is capped by the
+    caller."""
+    raw = _draws(seeds, 2, 10)
+    n_links = (raw[:, 0] % 4).tolist()
+    same = (raw[:, 1::3] % 10 < 8).tolist()
+    other = (raw[:, 2::3] % n_hosts).tolist()
+    doc = (raw[:, 3::3] % 3 != 0).tolist()
+    base = (1_000_000 + (seeds % 100_000) * 10).tolist()
+    hs = hosts(n_hosts)
+    out = []
+    for k, uc in enumerate(url_canons):
+        host = _link_host(uc)
+        out.append([
+            url_of(host if same[k][i] else hs[other[k][i]], "doc" if doc[k][i] else "mail", base[k] + i)
+            for i in range(n_links[k])
+        ])
+    return out
+
+
+def fetch_batch(url_canons: list[str], attempts, n_hosts: int = 20) -> dict[str, pa.Array]:
+    """THE deterministic fetch function over a batch of URLs (stands in
+    for reference oa.py:365-397 detail fetch + oa.py:178-213 download).
+    Returns one Arrow array per fetch column (frontier/fetch.py
+    FETCH_FIELDS). Per URL seed s = crc32(url_canon) ^ GLOBAL_SEED:
+
+    * fatal: s % FATAL_MOD == 0 always fails (ConnectionError class)
+    * stall: s % STALL_MOD == 0 exceeds FETCH_TIMEOUT_MS on EVERY
+      attempt -> abandoned at the deadline, dead-letters after
+      MAX_ATTEMPTS (reference server that never answers)
+    * transient failure: s % RETRY_MOD == 0 fails while attempt==0
+      (reference ReadTimeout -> try2try retry, run.py:23-27)
+    * slow: s % SLOW_MOD == 0 times out on attempt 0 only (congested
+      server; the retry goes through)
+    * otherwise: an image (png if s is even, else the lossy stand-in) +
+      caption + 0-3 outlinks.
+
+    Taxonomy, image pixels, average hashes, caption and link draws are
+    array ops over the batch; only deflate and string assembly run per
+    row (`zlib.compress` is the floor, 0.065-0.093 ms per image)."""
+    from .config import FETCH_TIMEOUT_MS
+
+    n = len(url_canons)
+    s = _seeds_of(url_canons)
+    first = np.asarray(attempts, dtype=np.int64) == 0
+    fatal = s % FATAL_MOD == 0
+    stall = ~fatal & (s % STALL_MOD == 0)
+    transient = ~fatal & ~stall & first & (s % RETRY_MOD == 0)
+    slow = ~fatal & ~stall & ~transient & first & (s % SLOW_MOD == 0)
+    timeout = stall | slow
+    ok = ~(fatal | timeout | transient)
+    png = s % 2 == 0
+
+    okx = np.flatnonzero(ok)
+    s_ok = s[okx]
+    h_ok, w_ok = _dims(s_ok)
+    payload: list[bytes | None] = [None] * n
+    phash = np.zeros(n, dtype=np.int64)
+    for lo in range(0, len(okx), CHUNK_ROWS):
+        rows = okx[lo : lo + CHUNK_ROWS]
+        canvas = _canvas(s_ok[lo : lo + CHUNK_ROWS])
+        hs_, ws_ = h_ok[lo : lo + CHUNK_ROWS], w_ok[lo : lo + CHUNK_ROWS]
+        phash[rows] = average_hash_canvas(canvas, hs_, ws_)
+        for i, b in zip(rows.tolist(), encode_canvas(canvas, hs_, ws_, png[rows])):
+            payload[i] = b
+    h = np.zeros(n, dtype=np.int32)
+    w = np.zeros(n, dtype=np.int32)
+    h[okx], w[okx] = h_ok, w_ok
+    captions = [""] * n
+    links: list[list[str]] = [[] for _ in range(n)]
+    ok_urls = [url_canons[i] for i in okx.tolist()]
+    for i, c, ls in zip(okx.tolist(), _captions(s_ok), _links(s_ok, ok_urls, n_hosts)):
+        captions[i], links[i] = c, ls
+    return {
+        "status": pa.array(np.where(fatal, "failed", np.where(ok, "ok", "retry")), pa.string()),
+        "bytes": pa.array(payload, pa.binary()),
+        "nbytes": pa.array([0 if b is None else len(b) for b in payload], pa.int64()),
+        "w": pa.array(w, pa.int32()),
+        "h": pa.array(h, pa.int32()),
+        "fmt": pa.array(np.where(ok, np.where(png, "png", "jpeg"), ""), pa.string()),
+        "caption": pa.array(captions, pa.string()),
+        "phash": pa.array(phash, pa.int64()),
+        "links": pa.array(links, pa.list_(pa.string())),
+        "elapsed_ms": pa.array(
+            np.where(timeout, FETCH_TIMEOUT_MS, 20 + (s >> 7) % BASE_MS_MOD), pa.int64()
+        ),
+        "reason": pa.array(
+            np.select([fatal, timeout, transient], ["connect_error", "timeout", "transient"], ""),
+            pa.string(),
+        ),
+    }
 
 
 def fetch_url(url_canon: str, attempt: int = 0, n_hosts: int = 20,
               max_depth: int = 2) -> FetchResult:
-    """THE deterministic fetch function (stands in for reference
-    oa.py:365-397 detail fetch + oa.py:178-213 download).
+    """One-row view of `fetch_batch` (the simulator's sequential fetch)."""
+    cols = fetch_batch([url_canon], [attempt], n_hosts)
+    return FetchResult(**{f.name: cols[f.name][0].as_py() for f in fields(FetchResult)})
 
-    * fatal: seed % FATAL_MOD == 0 always fails (ConnectionError class)
-    * stall: seed % STALL_MOD == 0 exceeds FETCH_TIMEOUT_MS on EVERY
-      attempt -> abandoned at the deadline, dead-letters after
-      MAX_ATTEMPTS (reference server that never answers)
-    * transient failure: seed % RETRY_MOD == 0 fails while attempt==0
-      (reference ReadTimeout -> try2try retry, run.py:23-27)
-    * slow: seed % SLOW_MOD == 0 times out on attempt 0 only (congested
-      server; the retry goes through)
-    * otherwise: an image + caption + 0-3 outlinks on mostly the same
-      host (link extraction analog of the parser fan-out, oa.py:583-586).
-    """
-    from .config import FETCH_TIMEOUT_MS
 
-    s = _seed_of(url_canon)
-    base_ms = 20 + (s >> 7) % BASE_MS_MOD
-    if s % FATAL_MOD == 0:
-        return FetchResult("failed", None, 0, 0, "", "", 0, [], base_ms, "connect_error")
-    if s % STALL_MOD == 0:
-        return FetchResult("retry", None, 0, 0, "", "", 0, [], FETCH_TIMEOUT_MS, "timeout")
-    if s % RETRY_MOD == 0 and attempt == 0:
-        return FetchResult("retry", None, 0, 0, "", "", 0, [], base_ms, "transient")
-    if s % SLOW_MOD == 0 and attempt == 0:
-        return FetchResult("retry", None, 0, 0, "", "", 0, [], FETCH_TIMEOUT_MS, "timeout")
-    img = synth_image(s)
-    fmt = "png" if s % 2 == 0 else "jpeg"
-    payload = encode_image(img, fmt)
-    caption = synth_caption(s)
-    ph = average_hash(img)
-    # outlinks: pure function of the URL seed; depth capped by caller.
-    # ONE raw draw covers the count and all per-link decisions.
-    rng = np.random.Generator(np.random.PCG64(s ^ 0x5EED))
-    raw = rng.integers(0, 1 << 32, size=1 + 3 * 3)
-    n_links = int(raw[0] % 4)
-    # parse original host/kind/n out of the canonical url
-    try:
-        rest = url_canon.split("://", 1)[1]
-        host, kind, n = rest.split("/")[0], rest.split("/")[1], int(rest.split("/")[2])
-    except (IndexError, ValueError):
-        host, kind, n = "h000.example.org", "doc", 0
-    hs = hosts(n_hosts)
-    links = []
-    for i in range(n_links):
-        same_host = raw[1 + 3 * i] % 10 < 8  # 80% same-host links
-        lhost = host if same_host else hs[int(raw[2 + 3 * i] % n_hosts)]
-        lkind = "doc" if raw[3 + 3 * i] % 3 else "mail"
-        links.append(url_of(lhost, lkind, 1_000_000 + (s % 100_000) * 10 + i))
-    h_, w_ = img.shape
-    return FetchResult("ok", payload, int(w_), int(h_), fmt, caption, ph, links, base_ms, "")
+def synth_image(seed: int) -> np.ndarray:
+    """One-row view of the fetch stage's image generator."""
+    seeds = np.array([seed], dtype=np.int64)
+    h, w = _dims(seeds)
+    return np.ascontiguousarray(_canvas(seeds)[0, : h[0], : w[0]])
+
+
+def synth_caption(seed: int) -> str:
+    """One-row view of the fetch stage's caption generator."""
+    return _captions(np.array([seed], dtype=np.int64))[0]
 
 
 def link_priority(url_canon: str) -> int:

@@ -509,8 +509,10 @@ def path_section_rollup(
         F.split(F.col(path_col), "/"), lambda s: s != F.lit("")
     )
     ndirs = F.least(F.size(parts) - 1, F.lit(max_depth))
+    # F.sequence(1, 0) is [1, 0], not empty: a root-level page (no
+    # directory) must explode nothing, so guard instead of clamping
     prefixes = F.transform(
-        F.sequence(F.lit(1), F.greatest(ndirs, F.lit(0))),
+        F.sequence(F.lit(1), ndirs),
         lambda i: F.struct(
             F.concat(
                 F.lit("/"), F.array_join(F.slice(parts, 1, i), "/")
@@ -519,7 +521,7 @@ def path_section_rollup(
         ),
     )
     rows = pages.select(
-        ndirs.alias("_nd"), F.explode(prefixes).alias("_p")
+        ndirs.alias("_nd"), F.explode(F.when(ndirs >= 1, prefixes)).alias("_p")
     ).select(
         F.col("_p.prefix").alias("prefix"),
         F.col("_p.depth").alias("depth"),

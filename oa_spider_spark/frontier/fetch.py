@@ -10,8 +10,8 @@ In production the batch function would hold a per-worker connection pool
 (module-level singleton, the analog of the reference's one
 `requests.Session` per site, oa.py:99-106) and issue concurrent HTTP
 requests per batch. In the sandbox the transport is the deterministic
-synthetic universe (`datagen.fetch_url`) — same plumbing, pure function
-instead of sockets.
+synthetic universe (`datagen.fetch_batch`, one call per Arrow batch) —
+same plumbing, pure function instead of sockets.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .. import datagen
+from ..worker import prepare_worker
 
 # Arrow-level output schema of the fetch stage. Input columns are passed
 # through; these are appended.
@@ -47,41 +48,18 @@ FETCH_OUT_DDL = (
 
 
 def synthetic_fetch_batch(batch: pa.RecordBatch, n_hosts: int) -> pa.RecordBatch:
-    """Fetch every row of one Arrow batch against the synthetic universe.
-    Pure function of (url_canon, attempt) — identical on every executor."""
-    urls = batch.column("url_canon").to_pylist()
-    attempts = batch.column("attempt").to_pylist()
-    status, payload, nbytes, ws, hs, fmts, caps, phs, links = [], [], [], [], [], [], [], [], []
-    elapsed, reasons = [], []
-    for uc, att in zip(urls, attempts):
-        r = datagen.fetch_url(uc, attempt=att or 0, n_hosts=n_hosts)
-        status.append(r.status)
-        payload.append(r.bytes)
-        nbytes.append(0 if r.bytes is None else len(r.bytes))
-        ws.append(r.w)
-        hs.append(r.h)
-        fmts.append(r.fmt)
-        caps.append(r.caption)
-        phs.append(r.phash)
-        links.append(r.links)
-        elapsed.append(r.elapsed_ms)
-        reasons.append(r.reason)
-    arrays = [
-        pa.array(status, pa.string()),
-        pa.array(payload, pa.binary()),
-        pa.array(nbytes, pa.int64()),
-        pa.array(ws, pa.int32()),
-        pa.array(hs, pa.int32()),
-        pa.array(fmts, pa.string()),
-        pa.array(caps, pa.string()),
-        pa.array(phs, pa.int64()),
-        pa.array(links, pa.list_(pa.string())),
-        pa.array(elapsed, pa.int64()),
-        pa.array(reasons, pa.string()),
-    ]
-    cols = list(batch.columns) + arrays
-    names = batch.schema.names + [f.name for f in FETCH_FIELDS]
-    return pa.RecordBatch.from_arrays(cols, names=names)
+    """Fetch every row of one Arrow batch against the synthetic universe
+    with one `datagen.fetch_batch` call. Pure function of (url_canon,
+    attempt) — identical on every executor."""
+    cols = datagen.fetch_batch(
+        batch.column("url_canon").to_pylist(),
+        batch.column("attempt").fill_null(0).to_numpy(zero_copy_only=False),
+        n_hosts,
+    )
+    return pa.RecordBatch.from_arrays(
+        list(batch.columns) + [cols[f.name] for f in FETCH_FIELDS],
+        names=batch.schema.names + [f.name for f in FETCH_FIELDS],
+    )
 
 
 def fetch_stage(selected: DataFrame, n_hosts: int = 20, fetch_fn=None) -> DataFrame:
@@ -95,6 +73,7 @@ def fetch_stage(selected: DataFrame, n_hosts: int = 20, fetch_fn=None) -> DataFr
     fn = fetch_fn or synthetic_fetch_batch
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        prepare_worker()
         for b in batches:
             if b.num_rows:
                 yield fn(b, n_hosts)

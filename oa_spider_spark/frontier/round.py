@@ -9,11 +9,12 @@ Round pipeline::
       → per-host budget window                                    O4
       → global order + limit → fetch_order                        O1-O3
       → salted repartition → mapInArrow fetch                     S6-S8
-      → stage ONCE to parquet, then column-pruned re-reads derive:
+      → stage ONCE to parquet (round totals observed on the write),
+        then column-pruned re-reads derive:
           · new frontier rows (explode links, canon, priority)    exploded
-          · retry rows (attempt+1, re-enter frontier)             T2
+          · retry rows (attempt+1), one frontier snapshot with ↑  T2
           · seen appends (ok + fatal url_hashes)                  §1.3
-          · per-partition lineage + round metrics                 T4
+          · per-partition lineage                                 T4
       → atomic commit of all appends                              tables.py
 
 The single staging write is deliberate: the expensive Arrow fetch output
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_HOST_BUDGET, MAX_ATTEMPTS
@@ -102,22 +103,23 @@ class RoundResult:
 def links_to_frontier(staged: DataFrame, round_id: int) -> DataFrame:
     """Explode ok-rows' outlinks into new frontier rows. Link priority /
     created_ms are pure crc32 expressions matching datagen.link_priority
-    (both sides JVM-computable AND Python-computable for the simulator)."""
-    links = (
+    (both sides JVM-computable AND Python-computable for the simulator).
+    One select builds every column (a withColumn chain re-analyzes the
+    plan once per call)."""
+    links = with_url_columns(
         staged.filter(F.col("status") == "ok")
         .select(F.explode("links").alias("url"), F.col("depth").alias("parent_depth"))
     )
-    links = with_url_columns(links)
     seed = F.crc32(F.encode(F.col("url_canon"), "utf-8")).bitwiseXOR(F.lit(42)).bitwiseAND(F.lit(0x7FFFFFFF))
-    return (
-        links.withColumn("kind", F.element_at(F.split(F.col("url_canon"), "/"), 4))
-        .withColumn("priority", F.pmod(seed, F.lit(100)).cast("int"))
-        .withColumn("created_ms", (F.lit(1_600_000_000_000) + F.pmod(seed, F.lit(10_000_000))).cast("long"))
-        .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
-        .withColumn("attempt", F.lit(0))
-        .withColumn("round_added", F.lit(round_id))
-        .select(*FRONTIER_COLS)
-    )
+    cols = {
+        "kind": F.element_at(F.split(F.col("url_canon"), "/"), 4),
+        "priority": F.pmod(seed, F.lit(100)).cast("int"),
+        "created_ms": (F.lit(1_600_000_000_000) + F.pmod(seed, F.lit(10_000_000))).cast("long"),
+        "depth": (F.col("parent_depth") + 1).cast("int"),
+        "attempt": F.lit(0),
+        "round_added": F.lit(round_id),
+    }
+    return links.select(*[cols[c].alias(c) if c in cols else F.col(c) for c in FRONTIER_COLS])
 
 
 def run_round(
@@ -138,7 +140,7 @@ def run_round(
     timings: dict | None = None,
 ) -> RoundResult:
     """`timings`, when a dict is passed, is filled with per-phase wall
-    seconds (select/fetch_stage/derived_stage/commit_totals) so bench
+    seconds (select/fetch_stage/derived_stage/commit) so bench
     regressions are attributable without a separate profiling session
     (VERDICT r02 item 6). Phases are split at the EAGER points — plan
     building is lazy, so each phase's number is the materialization it
@@ -192,7 +194,7 @@ def run_round(
     selected = selected_full.drop(
         "budget_per_round", "crawl_delay_ms", "robots_disallow", "proxy"
     )
-    _mark("select")  # eager part: budget_and_order's persist-fill + bounds
+    _mark("select")  # plan building only: the selection runs inside the fetch job
 
     # --- fetch (single materialization) ----------------------------------
     nparts = partitions or spark.sparkContext.defaultParallelism
@@ -200,11 +202,26 @@ def run_round(
     fetched = fetch_stage(fetch_in, n_hosts=n_hosts).withColumn(
         "partition_id", F.spark_partition_id()
     ).withColumn("round", F.lit(round_id))
-    staged_fetch_path = catalog.stage(fetched, "fetched", round_id)
+    # round totals ride the staging write as an Observation: no re-read of
+    # the staged output or of the lineage table just to sum them
+    totals_obs = Observation(f"fetched_r{round_id}")
+    status = F.col("status")
+    staged_fetch_path = catalog.stage(
+        fetched.observe(
+            totals_obs,
+            F.count(F.lit(1)).alias("selected"),
+            F.sum((status == "ok").cast("long")).alias("ok"),
+            F.sum((status == "retry").cast("long")).alias("retry"),
+            F.sum((status == "failed").cast("long")).alias("failed"),
+            F.sum("nbytes").alias("bytes"),
+        ),
+        "fetched", round_id,
+    )
     cache = getattr(selected_full, "_ordered_cache", None)
     if cache is not None:
         cache.unpersist()
-    staged = spark.read.parquet(staged_fetch_path)
+    # the schema just written: reading it back needs no inference job
+    staged = spark.read.schema(fetched.schema).parquet(staged_fetch_path)
     _mark("fetch_stage")
 
     # --- derived appends (column-pruned reads of the staged output) ------
@@ -212,12 +229,12 @@ def run_round(
         staged.select("status", "links", "depth"), round_id
     ).filter(F.col("depth") <= max_depth)
 
-    retries = (
-        staged.filter((F.col("status") == "retry") & (F.col("attempt") + 1 < MAX_ATTEMPTS))
-        .select(*[c for c in FRONTIER_COLS if c not in ("attempt", "round_added")],
-                (F.col("attempt") + 1).alias("attempt"))
-        .withColumn("round_added", F.lit(round_id + 1))
-        .select(*FRONTIER_COLS)
+    retries = staged.filter(
+        (F.col("status") == "retry") & (F.col("attempt") + 1 < MAX_ATTEMPTS)
+    ).select(
+        *[c for c in FRONTIER_COLS if c not in ("attempt", "round_added")],
+        (F.col("attempt") + 1).alias("attempt"),
+        F.lit(round_id + 1).alias("round_added"),
     )
 
     # seen = processed-and-done: ok + fatal + retry-exhausted (the
@@ -234,8 +251,7 @@ def run_round(
 
     # nbytes (computed in the fetch stage) keeps these aggregations off
     # the binary column — no full payload re-scan per round. Per-partition
-    # lineage carries the full status taxonomy so round totals are a
-    # driver-side sum over ≤nparts rows — no separate stats scan.
+    # lineage carries the full status taxonomy for exact resume audits.
     lineage = (
         staged.groupBy("partition_id")
         .agg(
@@ -252,19 +268,16 @@ def run_round(
     # the link count rides the staging write as an Observation — no
     # second scan of the new-frontier snapshot just to count it (and the
     # seen-delta count rides its write the same way, for the Bloom meta)
-    from pyspark.sql import Observation
-
     links_obs = Observation(f"links_r{round_id}")
     new_frontier = new_frontier.observe(links_obs, F.count(F.lit(1)).alias("n"))
     seen_obs = Observation(f"seen_r{round_id}")
     seen_append = seen_append.observe(seen_obs, F.count(F.lit(1)).alias("n"))
 
+    # links + retries are ONE frontier snapshot: one write job and one
+    # output commit instead of two (the streaming engine's union)
     staged_paths = {
         "fetched": [staged_fetch_path],
-        "frontier": [
-            catalog.stage(new_frontier, "frontier", round_id),
-            catalog.stage(retries, "frontier", round_id),
-        ],
+        "frontier": [catalog.stage(new_frontier.unionByName(retries), "frontier", round_id)],
         "seen": [catalog.stage(seen_append, "seen", round_id)],
         "lineage": [catalog.stage(lineage, "lineage", round_id)],
     }
@@ -291,22 +304,11 @@ def run_round(
     # the seen count rides the commit entry so the NEXT round's adaptive
     # decisions (probe mode + maintenance) read the log, not the table
     catalog.commit_round(round_id, staged_paths, counts={"seen": delta_seen})
-
-    totals = (
-        spark.read.parquet(*staged_paths["lineage"])
-        .agg(
-            F.sum("rows_in").alias("selected"),
-            F.sum("rows_out").alias("ok"),
-            F.sum("rows_retry").alias("retry"),
-            F.sum("rows_failed").alias("failed"),
-            F.sum("bytes_fetched").alias("bytes"),
-        )
-        .collect()[0]
-    )
-    _mark("commit_totals")
+    _mark("commit")
+    totals = totals_obs.get
     return RoundResult(
         round_id,
-        totals["selected"] or 0,
+        totals["selected"],
         totals["ok"] or 0,
         totals["retry"] or 0,
         totals["failed"] or 0,

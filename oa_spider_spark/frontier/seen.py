@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..worker import prepare_worker
+
 MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
@@ -60,6 +62,7 @@ def build_bloom_shards(
     DataFrame[shard:int, bits:binary]."""
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
+        prepare_worker()
         bits = np.zeros((m_bits_per_shard + 7) // 8, dtype=np.uint8)
         hashes = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
         pos = _positions(hashes, m_bits_per_shard, k).ravel()
@@ -92,6 +95,7 @@ def mark_maybe_seen(
     ) + ", maybe_seen boolean"
 
     def probe(rows: pd.DataFrame, bmp: pd.DataFrame) -> pd.DataFrame:
+        prepare_worker()
         if not len(rows):
             return rows.assign(maybe_seen=pd.Series([], dtype=bool))
         if not len(bmp) or bmp["bits"].iloc[0] is None:
@@ -156,6 +160,7 @@ def merge_bloom_shards(prior: DataFrame, delta: DataFrame) -> DataFrame:
     row-proportional."""
 
     def orfn(pdf: pd.DataFrame) -> pd.DataFrame:
+        prepare_worker()
         out = np.frombuffer(pdf["bits"].iloc[0], dtype=np.uint8).copy()
         for b in pdf["bits"].iloc[1:]:
             out |= np.frombuffer(b, dtype=np.uint8)

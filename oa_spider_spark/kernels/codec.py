@@ -46,15 +46,20 @@ def encode_png(arr: np.ndarray) -> bytes:
         h, w = arr.shape[:2]
     else:
         raise ValueError(f"unsupported shape {arr.shape}")
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
     raw = arr.reshape(h, w * channels)
     # one filter-type byte (0 = None) per scanline
     stream = np.zeros((h, 1 + w * channels), dtype=np.uint8)
     stream[:, 1:] = raw
+    return _png_bytes(w, h, color_type, stream.tobytes())
+
+
+def _png_bytes(w: int, h: int, color_type: int, stream: bytes) -> bytes:
+    """PNG file around already-filtered scanlines (`stream`)."""
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
     # level 1: the payloads are synthetic noise-bearing images where
     # levels 1-9 differ <8% in size but ~3x in CPU; this encoder sits on
     # the fetch hot path (a real crawler's encode cost is the camera's)
-    idat = zlib.compress(stream.tobytes(), 1)
+    idat = zlib.compress(stream, 1)
     return _PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
@@ -121,12 +126,19 @@ def decode_png(data: bytes) -> np.ndarray:
     return arr[:, :, 0] if channels == 1 else arr
 
 
+def _quantize(arr: np.ndarray, q: int = LOSSY_QUANT) -> np.ndarray:
+    return ((arr.astype(np.uint16) // q) * q + q // 2).clip(0, 255).astype(np.uint8)
+
+
+def _lossy_bytes(w: int, h: int, c: int, q: int, quant: bytes) -> bytes:
+    return b"FJPG" + struct.pack(">IIBB", w, h, c, q) + zlib.compress(quant, 1)
+
+
 def _encode_lossy(arr: np.ndarray, q: int = LOSSY_QUANT) -> bytes:
     arr = np.ascontiguousarray(arr, dtype=np.uint8)
     c = 1 if arr.ndim == 2 else arr.shape[2]
     h, w = arr.shape[:2]
-    quant = ((arr.astype(np.uint16) // q) * q + q // 2).clip(0, 255).astype(np.uint8)
-    return b"FJPG" + struct.pack(">IIBB", w, h, c, q) + zlib.compress(quant.tobytes(), 1)
+    return _lossy_bytes(w, h, c, q, _quantize(arr, q).tobytes())
 
 
 def _decode_lossy(data: bytes) -> np.ndarray:
@@ -206,6 +218,37 @@ def encode_image(arr: np.ndarray, fmt: str) -> bytes:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
+def _regions(arr: np.ndarray, hs: np.ndarray, ws: np.ndarray) -> list[memoryview]:
+    """The top-left `hs[i] × ws[i]` region of every `arr[i]`, each as one
+    contiguous row-major buffer: one masked gather for the whole stack."""
+    n, height, width = arr.shape
+    mask = (np.arange(height)[None, :, None] < hs[:, None, None]) & (
+        np.arange(width)[None, None, :] < ws[:, None, None]
+    )
+    flat = memoryview(arr[mask])
+    ends = np.cumsum(hs * ws).tolist()
+    return [flat[lo:hi] for lo, hi in zip([0, *ends[:-1]], ends)]
+
+
+def encode_canvas(canvas: np.ndarray, hs: np.ndarray, ws: np.ndarray, png: np.ndarray) -> list[bytes]:
+    """Encode n greyscale images held top-left in one padded (n, H, W)
+    uint8 canvas; image i is `canvas[i, :hs[i], :ws[i]]`, PNG where
+    `png[i]` else the lossy stand-in. Byte-identical to `encode_image`
+    per image: filter bytes and quantization are array ops over the
+    canvas, only deflate and the container bytes run per image."""
+    n, height, width = canvas.shape
+    hs, ws = np.asarray(hs), np.asarray(ws)
+    out: list[bytes] = [b""] * n
+    p, q = np.flatnonzero(png), np.flatnonzero(~np.asarray(png))
+    stream = np.zeros((len(p), height, width + 1), dtype=np.uint8)
+    stream[:, :, 1:] = canvas[p]  # one filter-type byte (0 = None) per scanline
+    for i, raw in zip(p.tolist(), _regions(stream, hs[p], ws[p] + 1)):
+        out[i] = _png_bytes(int(ws[i]), int(hs[i]), 0, raw)
+    for i, raw in zip(q.tolist(), _regions(_quantize(canvas[q]), hs[q], ws[q])):
+        out[i] = _lossy_bytes(int(ws[i]), int(hs[i]), 1, LOSSY_QUANT, raw)
+    return out
+
+
 def decode_image(data: bytes) -> np.ndarray:
     """Format-sniffing decode (reference `Image.open`, captcha.py:25).
     Real JPEG bytes (FFD8FF) dispatch to PIL when installed."""
@@ -261,3 +304,28 @@ def average_hash(arr: np.ndarray, hash_size: int = 8) -> int:
     if bits.size >= 64 and val >= 1 << 63:
         val -= 1 << 64
     return val
+
+
+def average_hash_canvas(canvas: np.ndarray, hs: np.ndarray, ws: np.ndarray) -> np.ndarray:
+    """`average_hash` (hash_size 8) of every image `canvas[i, :hs[i], :ws[i]]`
+    of a padded (n, H, W) greyscale canvas at once → int64 array.
+
+    Block sums are two batched matmuls with 0/1 block-membership matrices.
+    Every partial sum is an integer below 2^24 on canvases up to 64 × 64
+    (float64 past that), so the sums are exact in any summation order and
+    `sums / counts` is the same double as the reduceat form: bit-identical
+    to `average_hash` for images of at least 8 × 8."""
+    n, height, width = canvas.shape
+    steps = np.arange(9)
+    ys = (steps[None, :] * np.asarray(hs, dtype=np.int64)[:, None]) // 8
+    xs = (steps[None, :] * np.asarray(ws, dtype=np.int64)[:, None]) // 8
+    dt = np.float32 if height * width * 255 < 1 << 24 else np.float64
+    rows, cols = np.arange(height), np.arange(width)
+    in_y = ((rows >= ys[:, :-1, None]) & (rows < ys[:, 1:, None])).astype(dt)
+    in_x = ((cols >= xs[:, :-1, None]) & (cols < xs[:, 1:, None])).astype(dt)
+    sums = (in_y @ canvas.astype(dt) @ in_x.transpose(0, 2, 1)).astype(np.float64)
+    counts = np.diff(ys, axis=1)[:, :, None] * np.diff(xs, axis=1)[:, None, :]
+    blocks = (sums / counts).reshape(n, 64)
+    bits = blocks > blocks.mean(axis=1, keepdims=True)
+    # 64 bits big-endian → the same wrapped int64 as average_hash
+    return np.packbits(bits, axis=1).view(">u8").ravel().astype(np.int64)

@@ -923,7 +923,8 @@ def hashed_linear_score(
     (xxhash64 scale default; md5h60 when `portable` so the oracle
     reproduces bucket ids). Duplicate tokens count with multiplicity
     (term frequency), the standard linear-model semantics. Per doc:
-    logit_micro = Σ tf_b · w_b + bias (bucket -1 in the weight table),
+    logit_micro = Σ tf_b · w_b + bias (bucket -1 in the weight table,
+    0 when it has no such row),
     accept = logit >= threshold.
 
     Plan: one token explode -> (doc, bucket, tf) aggregate (map-side
@@ -955,8 +956,11 @@ def hashed_linear_score(
             ).cast("long").alias("_dot")
         )
     )
-    bias = weights.filter(F.col("bucket") == -1).select(
-        F.col("weight_micro").alias("_bias")
+    # one row whatever the table holds: no bias row means bias 0
+    bias = weights.agg(
+        F.coalesce(
+            F.sum(F.when(F.col("bucket") == -1, F.col("weight_micro"))), F.lit(0)
+        ).alias("_bias")
     )
     out = scored.crossJoin(F.broadcast(bias))
     return out.select(

@@ -2899,19 +2899,25 @@ def q_path_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path_section_rollup). Pages live at /s{e mod 4}/c{e mod 12}/p{e}
     .html — four top sections, three subdirs each (c ≡ s mod 4), so
     /sX rows carry subtree counts with zero directs and /sX/cY rows
-    are all-direct."""
+    are all-direct. Every tenth event also adds a root-level page
+    /p{e}.html, which has no directory and must add no row."""
     from .frontier.canon import path_section_rollup
 
     e = _t(spark, sf_dir, "events")
     eid = F.col("event_id")
+    page = F.concat(F.lit("/p"), eid.cast("string"), F.lit(".html"))
     path = F.concat(
         F.lit("/s"), (eid % 4).cast("string"),
-        F.lit("/c"), (eid % 12).cast("string"),
-        F.lit("/p"), eid.cast("string"), F.lit(".html"),
+        F.lit("/c"), (eid % 12).cast("string"), page,
     )
-    return path_section_rollup(e.select(path.alias("path")))
+    pages = e.select(path.alias("path")).unionByName(
+        e.filter(eid % 10 == 0).select(page.alias("path"))
+    )
+    return path_section_rollup(pages)
 
 
+# root-level pages (/p{e}.html for e % 10 = 0) have no directory
+# prefix, so they contribute no rows_ entry
 SQL_PATH_ROLLUP = """
 WITH p AS (
   SELECT '/s' || (event_id % 4)::VARCHAR AS s1,

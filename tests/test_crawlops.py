@@ -1076,3 +1076,15 @@ def test_path_rollup_depth_cap_and_directs(spark):
     deep_rows = [k for k in out if k[0].startswith("/d0")]
     assert len(deep_rows) == 3
     assert out[("/d0/d1/d2", 3)]["n_direct"] == 1
+
+
+def test_path_rollup_root_page_emits_no_prefix(spark):
+    """A root-level page has no directory: it adds no prefix row (the
+    F.sequence(1, 0) = [1, 0] trap emitted its filename at depth 1 and
+    '/' at depth 0)."""
+    from oa_spider_spark.frontier.canon import path_section_rollup
+
+    df = spark.createDataFrame([("/root.html",), ("/a/p.html",)], "path string")
+    got = {(r["prefix"], r["depth"], r["n_subtree"], r["n_direct"])
+           for r in path_section_rollup(df).collect()}
+    assert got == {("/a", 1, 1, 1)}

@@ -167,6 +167,37 @@ def test_lineage_accounts_for_all_rows(spark, crawl_pair):
         assert per_round[res.round_id] == res.selected
 
 
+def test_round_totals_match_lineage(spark, crawl_pair):
+    """RoundResult totals come from an Observation on the staging write;
+    they must equal the per-partition lineage rows of the same round."""
+    cat, results, *_ = crawl_pair
+    sums = {
+        row["round"]: row
+        for row in cat.read(spark, "lineage").groupBy("round").agg(
+            F.sum("rows_in").alias("selected"), F.sum("rows_out").alias("ok"),
+            F.sum("rows_retry").alias("retry"), F.sum("rows_failed").alias("failed"),
+            F.sum("bytes_fetched").alias("bytes"),
+        ).collect()
+    }
+    for res in results:
+        row = sums[res.round_id]
+        assert (res.selected, res.fetched_ok, res.retried, res.failed, res.bytes_fetched) == (
+            row["selected"], row["ok"], row["retry"], row["failed"], row["bytes"]
+        )
+
+
+def test_empty_selection_returns_zero_totals(spark, tmp_path):
+    """Nothing selectable (every URL past max_depth): the round still
+    commits and reports all-zero totals."""
+    seeds = [dict(r, depth=3) for r in datagen.seed_frontier_rows(20, n_hosts=4)]
+    cat = Catalog(tmp_path / "cat")
+    seed_catalog(spark, cat, seeds)
+    res = run_round(spark, cat, 0, n_hosts=4, default_budget=10, max_depth=2)
+    assert (res.selected, res.fetched_ok, res.retried, res.failed, res.new_links,
+            res.bytes_fetched) == (0, 0, 0, 0, 0, 0)
+    assert 0 in cat.committed_rounds()
+
+
 def test_exact_resume_skips_committed_rounds(spark, crawl_pair):
     cat, results, *_ = crawl_pair
     # re-running the same crawl must be a no-op (idempotent restart)

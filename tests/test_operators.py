@@ -1389,6 +1389,22 @@ def test_hashed_linear_score_exact_dot(spark):
     assert out[1]["accept"] == (out[1]["logit_micro"] >= 0)
 
 
+def test_hashed_linear_score_defaults_bias_to_zero(spark):
+    """A weight table without a bias row (bucket -1) scores every doc
+    with bias 0 instead of returning no rows."""
+    from oa_spider_spark.operators.text import hashed_linear_score
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma")], "doc_id long, text string"
+    )
+    w = spark.createDataFrame([(b, 7) for b in range(8)], "bucket int, weight_micro long")
+    out = {
+        r["doc_id"]: r["logit_micro"]
+        for r in hashed_linear_score(docs, w, n_buckets=8, portable=True).collect()
+    }
+    assert out == {1: 14, 2: 7}
+
+
 def test_threshold_sweep_exact_counts(spark):
     """Hand pairs/truth: confusion counts per threshold are exact,
     including truth pairs missing from the scored set (score NULL —
