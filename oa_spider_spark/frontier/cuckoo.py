@@ -65,9 +65,11 @@ def _alt_bucket(fp: np.uint16, i: int, nb: int) -> int:
 
 def _insert_all(table: np.ndarray, h64: np.ndarray, nb: int) -> list:
     """Insert hashes into the bucket table (in sorted-hash order for
-    determinism); returns the overflow stash (hashes whose eviction
-    walk exceeded MAX_KICKS — exact membership fallback)."""
+    determinism); returns the overflow stash (hashes, as signed int64
+    like the url_hash column, whose eviction walk exceeded MAX_KICKS —
+    exact membership fallback)."""
     order = np.argsort(h64, kind="stable")
+    signed = h64.view(np.int64)
     fps, i1s, i2s = _derive(h64, nb)
     stash = []
     rng_state = 0
@@ -84,11 +86,13 @@ def _insert_all(table: np.ndarray, h64: np.ndarray, nb: int) -> list:
             continue
         # eviction walk: deterministic victim slot from the walk count
         b, cur = i1, fp
+        kicks = []
         for kick in range(MAX_KICKS):
             rng_state = (rng_state * 6364136223846793005 + 1442695040888963407) & (
                 (1 << 64) - 1
             )
             slot = (rng_state >> 33) % BUCKET_SLOTS
+            kicks.append((b, slot, int(table[b, slot])))
             cur, table[b, slot] = int(table[b, slot]), cur
             b = _alt_bucket(np.uint16(cur), b, nb)
             empty = np.flatnonzero(table[b] == 0)
@@ -97,7 +101,12 @@ def _insert_all(table: np.ndarray, h64: np.ndarray, nb: int) -> list:
                 placed = True
                 break
         if not placed:
-            stash.append(int(h64[idx]))
+            # the walk's last victim belongs to an already-inserted key:
+            # undo the chain so every displaced fingerprint is back in
+            # place, then stash the NEW key (the only one left homeless)
+            for b, slot, old in reversed(kicks):
+                table[b, slot] = old
+            stash.append(int(signed[idx]))
     return stash
 
 

@@ -1,9 +1,8 @@
 """Streaming crawl: the reference's 20-minute cron cadence
 (`README_OLD.md:36-42`) becomes a Structured Streaming query over the
 frontier's append directory — each micro-batch is one "round", processed
-with the exact same selection/fetch stages as the batch engine via
-`foreachBatch` (exactly-once: the catalog commit is idempotent per
-epoch, so a replayed batch after failure re-commits harmlessly).
+by the batch engine's own `run_round` via `foreachBatch` (exactly-once:
+an epoch already in the commit log is skipped on replay).
 
 `Trigger.AvailableNow` drains everything pending then stops — the
 streaming twin of "run one cron round now". A long-running deployment
@@ -15,21 +14,14 @@ host per 10-second window, tolerating 30 s of event-time lateness.
 
 from __future__ import annotations
 
-import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_HOST_BUDGET, MAX_ATTEMPTS
-from ..frontier.fetch import fetch_stage
-from ..frontier.politeness import budget_and_order, salted_repartition
-from ..frontier.round import FRONTIER_COLS, dedup_frontier, links_to_frontier
+from ..config import DEFAULT_HOST_BUDGET
+from ..frontier.round import FRONTIER_DDL, run_round
 from ..tables import Catalog
-
-FRONTIER_DDL = (
-    "url string, url_canon string, url_hash long, host string, kind string, "
-    "priority int, created_ms long, depth int, attempt int, round_added int"
-)
 
 
 def frontier_stream(
@@ -68,176 +60,37 @@ def streaming_crawl(
 ):
     """Run the crawl as a streaming query; returns the StreamingQuery.
 
-    Each micro-batch: dedup (within batch) → anti-join committed seen →
-    budget window → order → Arrow fetch → commit fetched+seen under
-    round_id = 10_000 + epoch (offset to never collide with batch-mode
-    rounds in the same catalog). Extracted links are committed to the
-    catalog frontier (durability parity with the batch engine) and, when
-    `links_out_dir` points inside the stream's input glob, ALSO written
-    there — the self-feeding shape of a production crawl stream
-    (discovered URLs go back onto the topic), so the next drain crawls
-    one hop deeper. The per-epoch link directory is written once via a
-    hidden staging dir + atomic rename and left untouched on replay, so a
-    crash between the link write and the commit duplicates nothing, loses
-    nothing, and never deletes files a restarted source already listed."""
+    Each micro-batch is one `run_round` over the batch as its frontier,
+    under round_id = 10_000 + epoch (offset to never collide with
+    batch-mode rounds in the same catalog): same selection, fetch,
+    staging, derived appends, Bloom policy and commit as the batch
+    engine. The drain adds only what a micro-batch needs: candidates
+    over budget are re-queued to the catalog frontier as backlog, and
+    when `links_out_dir` points inside the stream's input glob the
+    extracted links are ALSO written there — the self-feeding shape of
+    a production crawl stream (discovered URLs go back onto the topic),
+    so the next drain crawls one hop deeper. The per-epoch link
+    directory is written once via a hidden staging dir + atomic rename
+    and left untouched on replay, so a crash between the link write and
+    the commit duplicates nothing, loses nothing, and never deletes
+    files a restarted source already listed."""
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        _wall0 = _t0 = _time.perf_counter()
-        phases: dict[str, float] = {}
-
-        def _mark(key: str) -> None:
-            nonlocal _t0
-            now = _time.perf_counter()
-            phases[key] = round(now - _t0, 3)
-            _t0 = now
-
+        wall0 = time.perf_counter()
         round_id = 10_000 + int(epoch_id)
-        if round_id in set(catalog.committed_rounds()):
+        if round_id in catalog.committed_rounds():
             return  # replay after failure: already committed, skip (exactly-once)
         if batch_df.isEmpty():
             return
-        _mark("empty_check")
-        sess = batch_df.sparkSession
-        active = dedup_frontier(batch_df).filter(F.col("depth") <= max_depth)
-        seen = catalog.read(sess, "seen")
-        # same seen-path scale machinery as the batch engine
-        # (frontier/round.py): the persisted Bloom index gates the exact
-        # anti-join so a long-running stream never re-hashes or
-        # re-shuffles the full seen table per micro-batch. Semantics are
-        # identical (superset filter + exact confirm) — streaming↔batch
-        # equivalence tests are unaffected by construction.
-        from ..frontier.seen import anti_join_seen, read_bloom_index
-
-        bloom_index = read_bloom_index(sess, catalog) if maintain_bloom else None
-        n_seen_before = (
-            bloom_index[1].n_items
-            if bloom_index is not None
-            else catalog.cumulative_count("seen")
+        phases = {"empty_check": round(time.perf_counter() - wall0, 3)}
+        run_round(
+            batch_df.sparkSession, catalog, round_id, frontier=batch_df,
+            n_hosts=n_hosts, default_budget=default_budget, max_depth=max_depth,
+            maintain_bloom=maintain_bloom, partitions=partitions,
+            links_out_dir=links_out_dir, timings=phases,
         )
-        active = anti_join_seen(
-            active, seen, use_bloom="auto", index=bloom_index,
-            est_seen=n_seen_before,
-        )
-        active = active.withColumn("budget_per_round", F.lit(default_budget))
-        # keep a handle on the persisted selection BEFORE .drop (the drop
-        # loses the _ordered_cache attribute) so the cache can be released
-        # after the snapshot commit — otherwise every micro-batch leaks one
-        # MEMORY_AND_DISK DataFrame (mirrors run_round's unpersist)
-        ordered = budget_and_order(active, default_budget)
-        selected = ordered.drop("budget_per_round")
-        # 2× the core count by default, matching the batch engine's bench
-        # shape: the Arrow fetch is the long pole, and a single wave of
-        # core-count tasks idles cores behind its stragglers — two waves
-        # keep them fed (same reasoning as run_round's partitions arg)
-        nparts = partitions or 2 * sess.sparkContext.defaultParallelism
-        fetched = fetch_stage(
-            salted_repartition(selected, nparts),
-            n_hosts=n_hosts,
-        ).withColumn("round", F.lit(round_id)).withColumn(
-            "partition_id", F.spark_partition_id()
-        )
-        staged_path = catalog.stage(fetched, "fetched", round_id)
-        _mark("fetch_stage")  # first action: selection + fetch + staging
-        staged = sess.read.parquet(staged_path)
-        # over-budget rows are NOT dropped: they re-enter the frontier
-        # table as backlog for the next round (the batch engine's
-        # unselected-rows-stay semantics, frontier/round.py). The
-        # selected-key side comes from the STAGED fetch output, not the
-        # `selected` plan — joining against `selected` would re-run the
-        # whole budget/rank window pipeline a second time per epoch
-        # (the input is cached; the windows are not)
-        backlog = active.drop("budget_per_round").join(
-            staged.select("url_hash"), "url_hash", "left_anti"
-        ).select(*FRONTIER_COLS)
-        # seen = processed-and-done, matching the batch engine: ok, fatal,
-        # and retry-exhausted (dead-letter) rows
-        seen_append = staged.filter(
-            (F.col("status") != "retry")
-            | (F.col("attempt") + 1 >= MAX_ATTEMPTS)
-        ).select("url_hash", "url_canon", "status", F.lit(round_id).alias("round_seen"))
-        # round_added bumps to round_id + 1 exactly like the batch engine
-        # (frontier/round.py retries): a re-queued URL must carry the round
-        # it was re-queued IN, or frontier audits and dedup_frontier's
-        # (attempt, round_added, priority) tie-break diverge between modes
-        retries = staged.filter(
-            (F.col("status") == "retry") & (F.col("attempt") + 1 < MAX_ATTEMPTS)
-        ).select(
-            *[c for c in FRONTIER_COLS if c not in ("attempt", "round_added")],
-            (F.col("attempt") + 1).alias("attempt"),
-        ).withColumn("round_added", F.lit(round_id + 1)).select(*FRONTIER_COLS)
-        new_links = links_to_frontier(
-            staged.select("status", "links", "depth"), round_id
-        ).filter(F.col("depth") <= max_depth)
-        if links_out_dir is not None:
-            dest = f"{links_out_dir}/links_epoch_{round_id}"
-            if not os.path.exists(dest):
-                # write under a '_'-prefixed dir (hidden to Spark file
-                # listings, so the stream source never snapshots the parts)
-                # then atomically rename into the input glob. Overwriting
-                # `dest` in place on replay would DELETE part files a
-                # restarted AvailableNow source may already have listed as
-                # pending input, failing the whole drain on missing files;
-                # with the rename, a replay finds `dest` complete and skips
-                # the rewrite (content is deterministic per epoch). Local-fs
-                # rename; an object-store deployment would use a manifest
-                # commit instead.
-                staging = f"{links_out_dir}/_staging/links_epoch_{round_id}"
-                new_links.write.mode("overwrite").parquet(staging)
-                os.rename(staging, dest)
-            # read the written links back for the catalog append instead of
-            # recomputing them — the second evaluation would re-run the
-            # staged-fetch scan + explode/canonicalize pass, violating the
-            # one-staged-pass doctrine (frontier/round.py module docstring)
-            new_links = sess.read.schema(FRONTIER_DDL).parquet(dest)
-        # ONE frontier staging write for backlog + retries + links: three
-        # separate writes cost three job setups + output commits per epoch
-        # — a fixed ~2 s/epoch that dwarfed small batches (the r04
-        # streaming bench's vs_batch 0.45). The union is schema-identical
-        # (FRONTIER_COLS) and the derived branches still read the staged
-        # fetch output column-pruned, exactly once each.
-        frontier_append = backlog.unionByName(retries).unionByName(
-            new_links.select(*FRONTIER_COLS)
-        )
-        staged_tables = {
-            "fetched": [staged_path],
-            "seen": [catalog.stage(seen_append, "seen", round_id)],
-            "frontier": [catalog.stage(frontier_append, "frontier", round_id)],
-        }
-        # parquet count() on the just-staged delta is footer-metadata
-        # only — no second scan of the fetch output
-        delta_n = sess.read.parquet(*staged_tables["seen"]).count()
-        if maintain_bloom == "auto":
-            # same adaptive policy as the batch engine (frontier/round.py):
-            # maintain once an index exists or the corpus crosses the
-            # probe breakeven; below it the auto probe never uses shards
-            from ..frontier.seen import SEEN_INDEX_MIN
-
-            if n_seen_before is None and seen is not None:
-                n_seen_before = seen.count()  # legacy log without counts
-            do_maintain = bloom_index is not None or (
-                (n_seen_before or 0) + delta_n >= SEEN_INDEX_MIN
-            )
-        else:
-            do_maintain = bool(maintain_bloom)
-        if do_maintain:
-            from ..frontier.seen import update_bloom_index
-
-            staged_tables.update(
-                update_bloom_index(
-                    sess, catalog, round_id, staged_tables["seen"],
-                    delta_count=delta_n,
-                )
-            )
-        _mark("derived_stage")
-        catalog.commit_round(round_id, staged_tables, counts={"seen": delta_n})
-        cache = getattr(ordered, "_ordered_cache", None)
-        if cache is not None:
-            cache.unpersist()
-        _mark("commit")
         if epoch_log is not None:
-            phases["epoch_wall"] = round(_time.perf_counter() - _wall0, 3)
+            phases["epoch_wall"] = round(time.perf_counter() - wall0, 3)
             epoch_log.append({"epoch": int(epoch_id), **phases})
 
     writer = (

@@ -223,30 +223,34 @@ _UNPARTITIONED_OK = {
 }
 
 
-def _unpartitioned_windows(path: pathlib.Path):
-    """(enclosing function, line) of every `Window.orderBy(...)`,
-    `Window.rowsBetween/rangeBetween(...)` or `Window.partitionBy()`."""
+def _calls(path: pathlib.Path, match):
+    """(enclosing function, call node) of every call `match` accepts."""
 
     def visit(node, fn):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 yield from visit(child, child.name)
                 continue
-            f = getattr(child, "func", None)
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(f, ast.Attribute)
-                and isinstance(f.value, ast.Name)
-                and f.value.id == "Window"
-                and (
-                    f.attr in ("orderBy", "rowsBetween", "rangeBetween")
-                    or (f.attr == "partitionBy" and not child.args)
-                )
-            ):
-                yield fn, child.lineno
+            if isinstance(child, ast.Call) and match(child):
+                yield fn, child
             yield from visit(child, fn)
 
     yield from visit(ast.parse(path.read_text()), None)
+
+
+def _is_unpartitioned_window(call: ast.Call) -> bool:
+    """`Window.orderBy(...)`, `Window.rowsBetween/rangeBetween(...)` or
+    `Window.partitionBy()`."""
+    f = call.func
+    return (
+        isinstance(f, ast.Attribute)
+        and isinstance(f.value, ast.Name)
+        and f.value.id == "Window"
+        and (
+            f.attr in ("orderBy", "rowsBetween", "rangeBetween")
+            or (f.attr == "partitionBy" and not call.args)
+        )
+    )
 
 
 def test_no_partitionless_window_outside_cell_rank():
@@ -259,7 +263,34 @@ def test_no_partitionless_window_outside_cell_rank():
         rel = path.relative_to(root).as_posix()
         if rel == "cellrank.py":
             continue
-        for fn, line in _unpartitioned_windows(path):
+        for fn, call in _calls(path, _is_unpartitioned_window):
             if (rel, fn) not in _UNPARTITIONED_OK:
-                bad.append(f"{rel}:{line} in {fn}")
+                bad.append(f"{rel}:{call.lineno} in {fn}")
     assert not bad, "partition-less Window outside cell_rank: " + ", ".join(bad)
+
+
+# The round's stages, wired together in exactly one place.
+_ROUND_STAGES = {
+    "fetch_stage", "budget_and_order", "anti_join_seen",
+    "update_bloom_index", "links_to_frontier",
+}
+
+
+def _stage_name(call: ast.Call) -> str | None:
+    f = call.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    return name if name in _ROUND_STAGES else None
+
+
+def test_round_stages_wired_only_in_run_round():
+    """One round body: batch rounds and streaming micro-batches both go
+    through `run_round`, so no other library code may call its stages —
+    a second wiring is a second round body that drifts."""
+    root = pathlib.Path(entry_mod.__file__).parent / "oa_spider_spark"
+    bad = [
+        f"{path.relative_to(root).as_posix()}:{call.lineno} {_stage_name(call)} in {fn}"
+        for path in sorted(root.rglob("*.py"))
+        for fn, call in _calls(path, _stage_name)
+        if (path.relative_to(root).as_posix(), fn) != ("frontier/round.py", "run_round")
+    ]
+    assert not bad, "round stage called outside run_round: " + ", ".join(bad)

@@ -12,6 +12,8 @@ size, not corpus lifetime.
   producing byte-identical crawl results to the plain layout.
 """
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from oa_spider_spark import datagen
@@ -334,6 +336,29 @@ def test_full_scale_stack_crawl_equivalence(spark, tmp_path):
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.mark.parametrize("n_buckets,n_keys", [(8, 40), (8, 64), (16, 80), (64, 300)])
+def test_cuckoo_overfull_table_keeps_every_key(n_buckets, n_keys):
+    """An eviction walk that runs out of MAX_KICKS must leave every
+    already-inserted fingerprint in place and stash the NEW key: no
+    false negatives even when the table is overfull, and every key
+    holds exactly one slot or one stash entry (signed, like url_hash)."""
+    from oa_spider_spark.frontier.cuckoo import BUCKET_SLOTS, _derive, _insert_all
+
+    keys = np.random.default_rng(7).integers(
+        np.iinfo(np.int64).min, np.iinfo(np.int64).max, n_keys, dtype=np.int64
+    )
+    table = np.zeros((n_buckets, BUCKET_SLOTS), dtype=np.uint16)
+    stash = _insert_all(table, keys.view(np.uint64), n_buckets)
+    fp, i1, i2 = _derive(keys.view(np.uint64), n_buckets)
+    hit = (
+        (table[i1] == fp[:, None]).any(axis=1)
+        | (table[i2] == fp[:, None]).any(axis=1)
+        | np.isin(keys, np.array(stash, dtype=np.int64))
+    )
+    assert int((~hit).sum()) == 0
+    assert int((table != 0).sum()) + len(stash) == n_keys
 
 
 def test_cuckoo_filter_insert_probe_delete(spark):

@@ -167,6 +167,24 @@ def test_streaming_batch_round_equivalence(spark, tmp_path):
         (r["url_hash"], r["status"]) for r in seen_s.collect()
     )
 
+    # lineage and commit-log parity: the drain runs the batch round body,
+    # so epoch 10000 writes the same per-partition lineage totals and
+    # records the same seen count in its commit entry as round 0
+    def lineage_sums(cat, rnd):
+        cols = ["rows_in", "rows_out", "rows_retry", "rows_timeout",
+                "rows_failed", "bytes_fetched"]
+        return cat.read(spark, "lineage").filter(F.col("round") == rnd).agg(
+            *[F.sum(c).alias(c) for c in cols]
+        ).first().asDict()
+
+    assert lineage_sums(cat_b, 0) == lineage_sums(cat_s, 10_000)
+    assert lineage_sums(cat_s, 10_000)["rows_in"] == 300
+
+    def committed_seen(cat, rnd):
+        return next(e["counts"]["seen"] for e in cat._read_log() if e["round"] == rnd)
+
+    assert committed_seen(cat_b, 0) == committed_seen(cat_s, 10_000) == seen_s.count()
+
     # retry re-queue parity: same urls, same bumped attempt
     front_b = cat_b.read(spark, "frontier")
     front_s = cat_s.read(spark, "frontier")
@@ -188,6 +206,46 @@ def test_streaming_batch_round_equivalence(spark, tmp_path):
     s1 = ordered_rows(fs.filter(F.col("round") == 10_001).filter(F.col("depth") >= 1))
     assert [r[:3] for r in b1_links] == [r[:3] for r in s1]
     assert len(s1) > 0
+
+
+def test_run_round_skips_existing_links_epoch_without_blocking(spark, tmp_path):
+    """A replayed round finds its links epoch dir already written: the
+    write is skipped, the links are read back from the dir and staged
+    into the frontier snapshot, and the link count (observed on that
+    read-back) is reported without waiting on a write that never ran."""
+    import os
+    import threading
+
+    from oa_spider_spark.frontier.round import run_round, seed_catalog
+
+    seeds = normalize_frontier(spark, datagen.seed_frontier_rows(60, n_hosts=4))
+    links_dir = str(tmp_path / "links")
+    first = Catalog(tmp_path / "first")
+    seed_catalog(spark, first, seeds)
+    want = run_round(spark, first, 0, n_hosts=4, default_budget=100, links_out_dir=links_dir)
+    epoch_dir = f"{links_dir}/links_epoch_0"
+    files_before = sorted(os.listdir(epoch_dir))
+    assert want.new_links > 0
+
+    replay = Catalog(tmp_path / "replay")
+    seed_catalog(spark, replay, seeds)
+    out: list = []
+    t = threading.Thread(
+        target=lambda: out.append(run_round(
+            spark, replay, 0, n_hosts=4, default_budget=100, links_out_dir=links_dir,
+        )),
+        daemon=True,
+    )
+    t.start()
+    t.join(180)
+    assert not t.is_alive(), "run_round blocked on a skipped links write"
+    assert out[0].new_links == want.new_links
+    assert sorted(os.listdir(epoch_dir)) == files_before
+    staged = replay.read(spark, "frontier").filter(F.col("round_added") == 0)
+    written = spark.read.schema(FRONTIER_DDL).parquet(epoch_dir)
+    assert sorted(r["url_hash"] for r in staged.filter(F.col("depth") == 1).collect()) == sorted(
+        r["url_hash"] for r in written.collect()
+    )
 
 
 def test_streaming_releases_selection_caches(spark, tmp_path):
