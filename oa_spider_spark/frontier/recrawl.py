@@ -336,12 +336,12 @@ def robots_revocation_feed(
     round_col: str = "round",
     rules_col: str = "rules_text",
 ) -> DataFrame:
-    """The missing link between robots monitoring and the DELETABLE
-    seen index (frontier/cuckoo.py): when a host's robots.txt rule set
-    CHANGES between consecutive fetches, previously-disallowed URLs
-    may have become fetchable — the crawl must revoke those hosts'
-    entries from the seen filter so they re-enter selection. This
-    operator detects the changes and sizes the revocation batch.
+    """Robots-change revocation sizing: when a host's robots.txt rule
+    set CHANGES between consecutive fetches, previously-disallowed URLs
+    may have become fetchable, and a crawl that revokes seen entries
+    would revoke those hosts' so they re-enter selection. This operator
+    detects the changes and sizes the revocation batch; nothing executes
+    revocations yet (the Bloom seen index cannot delete).
 
     Change detection is fingerprint-on-normalized-rules (md5 of the
     whitespace-collapsed rule text — byte noise like comment edits

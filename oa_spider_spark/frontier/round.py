@@ -161,8 +161,6 @@ def run_round(
     default_budget: int = DEFAULT_HOST_BUDGET,
     round_limit: int | None = None,
     max_depth: int = 2,
-    use_bloom: bool | str = "auto",
-    maintain_bloom: bool | str = "auto",
     seen_index_min: int | None = None,
     hosts_table: DataFrame | None = None,
     partitions: int | None = None,
@@ -186,15 +184,14 @@ def run_round(
     building is lazy, so each phase's number is the materialization it
     triggers, which is also how a cluster would account it.
 
-    `maintain_bloom="auto"` (default) mirrors the probe's adaptive policy
-    (VERDICT r04 item 2): per-round index maintenance starts only once
-    the cumulative seen count crosses `seen_index_min` (default
-    seen.SEEN_INDEX_MIN = the measured ~2×10⁷ probe breakeven) — below
-    that the auto probe takes the plain left_anti anyway, so shard upkeep
-    is pure overhead. Once an index EXISTS it is always kept fresh (a
-    skipped update would strand it stale — read_bloom_index discards
-    anything older than the last seen commit). True/False force the old
-    unconditional behaviors; staleness semantics are unchanged."""
+    The seen index follows one rule, read from the catalog: a fresh
+    persisted Bloom index gates the seen anti-join; with none the round
+    does a plain left_anti. The round builds the index once cumulative
+    seen reaches `seen_index_min` (None = seen.SEEN_INDEX_MIN, the
+    measured ~2×10⁷ probe breakeven; below it shard upkeep is pure
+    overhead) and keeps an existing index fresh every round (a skipped
+    update would strand it stale — read_bloom_index discards anything
+    older than the last seen commit)."""
     import time as _time
 
     _t0 = _time.perf_counter()
@@ -217,10 +214,10 @@ def run_round(
     # The persisted Bloom index (maintained below, per-round OR of the
     # seen delta) gates the anti-join so the seen table is never re-hashed
     # per round; its meta carries n_items so no count job runs either.
-    bloom_index = read_bloom_index(spark, catalog) if maintain_bloom else None
+    bloom_index = read_bloom_index(spark, catalog)
     # running seen count from commit-log metadata (index meta when one
-    # exists): feeds both the probe's auto policy and the maintenance
-    # decision below with ZERO count jobs. None = legacy log, fall back.
+    # exists): feeds the maintenance decision below with ZERO count jobs.
+    # None = legacy log, fall back.
     n_seen_before = (
         bloom_index[1].n_items
         if bloom_index is not None
@@ -228,8 +225,7 @@ def run_round(
     )
     active = dedup_frontier(frontier).filter(F.col("depth") <= max_depth)
     active = anti_join_seen(
-        active, seen, use_bloom=use_bloom, index=bloom_index,
-        est_seen=n_seen_before,
+        active, seen, use_bloom=bloom_index is not None, index=bloom_index
     )
     active = robots_allowed(active, hosts_table)
     selected_full = budget_and_order(active, default_budget, round_limit)
@@ -340,16 +336,10 @@ def run_round(
     if requeue_backlog:
         candidates.unpersist()
     delta_seen = seen_obs.get["n"]
-    if maintain_bloom == "auto":
-        threshold = seen_index_min if seen_index_min is not None else SEEN_INDEX_MIN
-        if n_seen_before is None and seen is not None:
-            n_seen_before = seen.count()  # legacy log without counts: one job
-        do_maintain = bloom_index is not None or (
-            (n_seen_before or 0) + delta_seen >= threshold
-        )
-    else:
-        do_maintain = bool(maintain_bloom)
-    if do_maintain:
+    threshold = seen_index_min if seen_index_min is not None else SEEN_INDEX_MIN
+    if n_seen_before is None and seen is not None:
+        n_seen_before = seen.count()  # legacy log without counts: one job
+    if bloom_index is not None or (n_seen_before or 0) + delta_seen >= threshold:
         # OR this round's delta into the persisted shards; committed in
         # the SAME round entry so index and rows stay atomic together
         staged_paths.update(
@@ -359,8 +349,8 @@ def run_round(
             )
         )
     _mark("derived_stage")
-    # the seen count rides the commit entry so the NEXT round's adaptive
-    # decisions (probe mode + maintenance) read the log, not the table
+    # the seen count rides the commit entry so the NEXT round's
+    # maintenance decision reads the log, not the table
     catalog.commit_round(round_id, staged_paths, counts={"seen": delta_seen})
     _mark("commit")
     totals = totals_obs.get

@@ -18,6 +18,11 @@ says "definitely not seen" skips the big join entirely.
 Build and probe use numpy bit-ops inside Arrow batches; bit positions are
 derived from the already-computed 64-bit url_hash by splitmix64 remixing
 (k hash functions from one hash, standard double-hashing construction).
+
+One rule decides when the round uses the index: a fresh persisted index
+gates the probe; `run_round` builds the index once cumulative seen
+reaches SEEN_INDEX_MIN and keeps it fresh from then on; with no fresh
+index the round does a plain `left_anti`.
 """
 
 from __future__ import annotations
@@ -130,6 +135,21 @@ def mark_maybe_seen(
 # an index older than the last seen commit is discarded, never trusted.
 
 BLOOM_MIN_CAPACITY = 1 << 20  # smallest filter: ~1.2 Mbit at 1% fpp
+BLOOM_SHARDS = 64
+BLOOM_FPP = 0.01
+
+# The one breakeven. Below this many seen URLs the plain JVM left_anti
+# wins outright: the whole seen side fits a broadcast/shuffle hash join
+# and the Python probe stage (worker startup + Arrow hops) costs more
+# than it saves. The shards pay off when the seen table is too big to
+# re-shuffle against the frontier every round (10^8+; the 10^10 design
+# point is the north rule). It gates both halves: `run_round` builds the
+# index once cumulative seen reaches it (below, per-round delta-hash +
+# shard-OR + rewrite is pure overhead: measured 8.7 s/round of
+# derived_stage at sf0.1), and `anti_join_seen(use_bloom="auto")`
+# probes above it. Env-overridable for deployments whose breakeven
+# differs (faster disks shift it down); the override moves both.
+SEEN_INDEX_MIN = int(os.environ.get("SEEN_INDEX_MIN", 20_000_000))
 
 
 @dataclass(frozen=True)
@@ -205,8 +225,6 @@ def update_bloom_index(
     round_id: int,
     staged_seen_paths: list[str],
     delta_count: int,
-    n_shards: int = 64,
-    fpp: float = 0.01,
 ) -> dict[str, list[str]]:
     """Fold this round's seen-append delta into the persisted index;
     returns staged-path entries to include in the SAME round commit (the
@@ -237,10 +255,10 @@ def update_bloom_index(
         )
         n_total = all_keys.count()
         capacity = max(BLOOM_MIN_CAPACITY, 4 * n_total)
-        m_total, k = bloom_params(capacity, fpp)
-        m_shard = max(64, m_total // n_shards)
-        new_shards = build_bloom_shards(all_keys, n_shards, m_shard, k)
-        new_meta = BloomMeta(n_shards, m_shard, k, n_total, capacity, round_id)
+        m_total, k = bloom_params(capacity, BLOOM_FPP)
+        m_shard = max(64, m_total // BLOOM_SHARDS)
+        new_shards = build_bloom_shards(all_keys, BLOOM_SHARDS, m_shard, k)
+        new_meta = BloomMeta(BLOOM_SHARDS, m_shard, k, n_total, capacity, round_id)
 
     meta_df = spark.createDataFrame([new_meta.as_row()], BLOOM_META_SCHEMA)
     return {
@@ -249,29 +267,10 @@ def update_bloom_index(
     }
 
 
-# Below this many seen URLs the plain JVM left_anti wins outright: the
-# whole seen side fits a broadcast/shuffle hash join and the Python probe
-# stage (worker startup + Arrow hops) costs more than it saves. The Bloom
-# shards pay off when the seen table is too big to re-shuffle against the
-# frontier every round (10^8+; the 10^10 design point is the north rule).
-BLOOM_MIN_SEEN = 20_000_000
-
-# Index MAINTENANCE gates on the same breakeven as the probe (VERDICT r04
-# item 2): paying delta-hash + shard-OR + shard rewrite every round only
-# makes sense once the probe those shards feed is itself the winning plan.
-# Below this, run_round(maintain_bloom="auto") skips the build entirely
-# (measured: unconditional maintenance cost the sf0.1 bench 8.7 s/round of
-# derived_stage for an index the auto probe never used). Env-overridable
-# for deployments whose breakeven differs (faster disks shift it down).
-SEEN_INDEX_MIN = int(os.environ.get("SEEN_INDEX_MIN", BLOOM_MIN_SEEN))
-
-
 def anti_join_seen(
     frontier: DataFrame,
     seen: DataFrame | None,
     use_bloom: bool | str = "auto",
-    n_shards: int = 64,
-    fpp: float = 0.01,
     est_seen: int | None = None,
     index: tuple[DataFrame, BloomMeta] | None = None,
 ) -> DataFrame:
@@ -285,7 +284,7 @@ def anti_join_seen(
     rounds, SURVEY.md §4 item 2).
 
     `use_bloom="auto"` (default) measures the seen table and enables the
-    sharded probe only above BLOOM_MIN_SEEN — below that the probe is a
+    sharded probe only from SEEN_INDEX_MIN — below that the probe is a
     measured pessimization (extra Python stage > saved join work).
     False positives can only cost an exact lookup, never drop a URL
     (SURVEY.md §7 hard-part 2).
@@ -307,7 +306,7 @@ def anti_join_seen(
     else:
         n = seen_keys.count() if use_bloom in (True, "auto") else 0
     if use_bloom == "auto":
-        use_bloom = n >= BLOOM_MIN_SEEN
+        use_bloom = n >= SEEN_INDEX_MIN
     if not use_bloom:
         return frontier.join(seen_keys, "url_hash", "left_anti")
     if n == 0:
@@ -316,8 +315,8 @@ def anti_join_seen(
         bloom, meta = index
         n_shards, m_shard, k = meta.n_shards, meta.m_shard, meta.k
     else:
-        m_total, k = bloom_params(n, fpp)
-        m_shard = max(64, m_total // n_shards)
+        m_total, k = bloom_params(n, BLOOM_FPP)
+        n_shards, m_shard = BLOOM_SHARDS, max(64, m_total // BLOOM_SHARDS)
         bloom = build_bloom_shards(seen_keys, n_shards, m_shard, k)
     marked = mark_maybe_seen(frontier, bloom, n_shards, m_shard, k)
     definitely_new = marked.filter(~F.col("maybe_seen")).drop("maybe_seen", "shard")

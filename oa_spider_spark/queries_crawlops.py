@@ -2939,9 +2939,8 @@ FROM rows_ GROUP BY prefix, depth
 
 
 def q_robots_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X155: the revocation feed linking robots monitoring to the
-    deletable cuckoo seen index (frontier/recrawl.py::
-    robots_revocation_feed). Hosts h0-h19 carry a per-host rule line;
+    """X155: the robots-change revocation feed
+    (frontier/recrawl.py::robots_revocation_feed). Hosts h0-h19 carry a per-host rule line;
     h3's rules genuinely change at round 3 (one detected pair, 2 -> 3,
     sized at its frontier URL count) while h5 only gains whitespace
     noise at round 2 — the normalized fingerprint must NOT fire."""

@@ -53,7 +53,7 @@ def streaming_crawl(
     available_now: bool = True,
     max_depth: int = 2,
     links_out_dir: str | None = None,
-    maintain_bloom: bool | str = "auto",
+    seen_index_min: int | None = None,
     epoch_log: list | None = None,
     max_files_per_trigger: int | None = None,
     partitions: int | None = None,
@@ -86,7 +86,7 @@ def streaming_crawl(
         run_round(
             batch_df.sparkSession, catalog, round_id, frontier=batch_df,
             n_hosts=n_hosts, default_budget=default_budget, max_depth=max_depth,
-            maintain_bloom=maintain_bloom, partitions=partitions,
+            seen_index_min=seen_index_min, partitions=partitions,
             links_out_dir=links_out_dir, timings=phases,
         )
         if epoch_log is not None:

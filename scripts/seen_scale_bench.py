@@ -1,23 +1,18 @@
 #!/usr/bin/env python
 """Seen-set scale evidence (VERDICT r03 item 1 'done' criterion).
 
-Pre-seeds a catalog with a SEEN_N-row synthetic seen corpus (default
-2×10^7 — above BLOOM_MIN_SEEN so the sharded probe engages on its own),
-then runs 3 consecutive crawl rounds and records the SELECT phase cost
-per round in two configurations:
+Pre-seeds a bucketed catalog (seen/frontier CLUSTERED BY url_hash) with
+a SEEN_N-row synthetic seen corpus plus its persisted Bloom index
+(default SEEN_N = 2×10^7, which meets SEEN_INDEX_MIN), then runs 3
+consecutive crawl rounds at their defaults and records the seen-path
+cost per round: the round probes the fresh index and confirms its
+maybe-set with an exchange-free join, so per-round cost is O(round
+delta) hash work, not corpus lifetime. The r03 comparison arm (shards
+rebuilt from the full seen table every round) is no longer a mode
+`run_round` can run; its numbers stay in BENCH/BASELINE.md.
 
-* legacy  — plain parquet layout, Bloom shards REBUILT from the full
-            seen table every round (r03 behavior): per-round cost grows
-            with corpus lifetime (full scan + Python re-hash of every
-            URL ever seen, plus an unbucketed exact-join reshuffle).
-* scale   — bucketed seen/frontier (CLUSTERED BY url_hash) + the
-            persisted incremental Bloom index: per-round cost is
-            O(round delta) hash work + an exchange-free confirm join.
-
-Output: one JSON line per mode + a summary block appended to
-BENCH/BASELINE.md by hand (see README). Flatness check: round 3 select
-must not exceed round 1 select by more than the noise band; the
-legacy-vs-scale ratio is the headline.
+Output: one JSON line of per-round seconds. Flatness check: round 3's
+seen path must not exceed round 1's by more than the noise band.
 
 Usage: SEEN_N=20000000 SPARK_GRAFT_CPUS=16 python scripts/seen_scale_bench.py
 """
@@ -50,7 +45,7 @@ def synth_seen(spark, n: int):
     )
 
 
-def run_mode(mode: str, seen_n: int, n_seeds: int, cpus: int, stage_base: str) -> dict:
+def run(seen_n: int, n_seeds: int, cpus: int, stage_base: str) -> dict:
     from oa_spider_spark import datagen
     from oa_spider_spark.frontier.round import dedup_frontier, run_round
     from oa_spider_spark.frontier.seen import (
@@ -61,13 +56,11 @@ def run_mode(mode: str, seen_n: int, n_seeds: int, cpus: int, stage_base: str) -
     from oa_spider_spark.session import get_spark
     from oa_spider_spark.tables import SCALE_LAYOUT, Catalog
 
-    spark = get_spark(
-        cores=cpus, app_name=f"seen_scale_{mode}", shuffle_partitions=32
-    )
+    spark = get_spark(cores=cpus, app_name="seen_scale", shuffle_partitions=32)
     n_hosts = 24
-    out: dict = {"mode": mode, "seen_n": seen_n, "n_seeds": n_seeds, "cpus": cpus}
-    with tempfile.TemporaryDirectory(prefix=f"seen_scale_{mode}_", dir=stage_base) as root:
-        cat = Catalog(root, bucketed=SCALE_LAYOUT if mode == "scale" else None)
+    out: dict = {"seen_n": seen_n, "n_seeds": n_seeds, "cpus": cpus}
+    with tempfile.TemporaryDirectory(prefix="seen_scale_", dir=stage_base) as root:
+        cat = Catalog(root, bucketed=SCALE_LAYOUT)
         # instrument staging so the index-maintenance cost inside the
         # round is attributable (it happens in the derived phase)
         stage_times: dict[str, list[float]] = {}
@@ -92,32 +85,29 @@ def run_mode(mode: str, seen_n: int, n_seeds: int, cpus: int, stage_base: str) -
             "frontier": [cat.stage(seeds, "frontier", 0)],
             "seen": [cat.stage(synth_seen(spark, seen_n), "seen", 0)],
         }
-        if mode == "scale":
-            # initial index build: the one full-corpus pass (amortized —
-            # every later round ORs only its delta)
-            t_idx = time.perf_counter()
-            staged.update(
-                update_bloom_index(spark, cat, -1, staged["seen"], delta_count=seen_n)
-            )
-            out["initial_index_build_sec"] = round(time.perf_counter() - t_idx, 2)
+        # initial index build: the one full-corpus pass (amortized —
+        # every later round ORs only its delta)
+        t_idx = time.perf_counter()
+        staged.update(
+            update_bloom_index(spark, cat, -1, staged["seen"], delta_count=seen_n)
+        )
+        out["initial_index_build_sec"] = round(time.perf_counter() - t_idx, 2)
         cat.commit_round(-1, staged)
         out["genesis_sec"] = round(time.perf_counter() - t0, 2)
         stage_times.clear()
 
         # THE metric: what the selection pays per round to answer
-        # "which frontier rows are new?" — measured as an explicit
-        # materialization so lazy rebuild work cannot hide in the fetch
-        # phase. legacy = count job + full-table shard rebuild + probe +
-        # unbucketed confirm join (r03 behavior); scale = persisted-index
-        # probe + exchange-free confirm join.
+        # "which frontier rows are new?" — the round's own seen step
+        # (fresh-index probe + exchange-free confirm join), measured as
+        # an explicit materialization so it cannot hide in the fetch phase
         seen_path, totals = [], []
         for r in range(3):
             frontier = cat.read(spark, "frontier")
             seen = cat.read(spark, "seen")
-            idx = read_bloom_index(spark, cat) if mode == "scale" else None
+            idx = read_bloom_index(spark, cat)
             t0 = time.perf_counter()
             n_new = anti_join_seen(
-                dedup_frontier(frontier), seen, use_bloom=True, index=idx
+                dedup_frontier(frontier), seen, use_bloom=idx is not None, index=idx
             ).count()
             seen_path.append(round(time.perf_counter() - t0, 2))
             out["survivors"] = n_new
@@ -127,21 +117,19 @@ def run_mode(mode: str, seen_n: int, n_seeds: int, cpus: int, stage_base: str) -
                 n_hosts=n_hosts,
                 default_budget=max(200, n_seeds // (3 * n_hosts)),
                 partitions=cpus * 2,
-                maintain_bloom=(mode == "scale"),
-                use_bloom=True,
                 timings={},
             )
             totals.append(round(time.perf_counter() - t0, 2))
         out["seen_path_sec_per_round"] = seen_path
         out["round_total_sec"] = totals
-        if mode == "scale":
-            out["index_maintenance_sec_per_round"] = [
-                round(a + b, 2)
-                for a, b in zip(
-                    stage_times.get("bloom_shards", []),
-                    stage_times.get("bloom_meta", []),
-                )
-            ]
+        out["index_maintenance_sec_per_round"] = [
+            round(a + b, 2)
+            for a, b in zip(
+                stage_times.get("bloom_shards", []),
+                stage_times.get("bloom_meta", []),
+            )
+        ]
+        out["flat_last_vs_first"] = round(seen_path[-1] / max(seen_path[0], 1e-9), 2)
         cat.cleanup_session(spark)
     spark.stop()
     return out
@@ -154,37 +142,7 @@ def main() -> None:
     stage_base = os.environ.get(
         "SPARK_GRAFT_STAGE_DIR", "/dev/shm" if os.path.isdir("/dev/shm") else None
     )
-    results = []
-    # separate processes are NOT needed here (same parallelism both
-    # modes), but run scale first so the legacy numbers cannot benefit
-    # from page-cache warming of the synthetic corpus
-    for mode in ("scale", "legacy"):
-        res = run_mode(mode, seen_n, n_seeds, cpus, stage_base)
-        print(json.dumps(res), flush=True)
-        results.append(res)
-    scale, legacy = results
-    maint = scale.get("index_maintenance_sec_per_round", [])
-    summary = {
-        "metric": "per-round seen-path seconds at a pre-seeded seen corpus",
-        "seen_n": seen_n,
-        "scale_seen_path": scale["seen_path_sec_per_round"],
-        "legacy_seen_path": legacy["seen_path_sec_per_round"],
-        "scale_index_maintenance": maint,
-        # legacy per-round cost = its seen-path (rebuild happens inline);
-        # scale per-round cost = seen-path + incremental maintenance
-        "speedup": round(
-            sum(legacy["seen_path_sec_per_round"])
-            / max(sum(scale["seen_path_sec_per_round"]) + sum(maint), 1e-9),
-            2,
-        ),
-        "scale_flat_last_vs_first": round(
-            scale["seen_path_sec_per_round"][-1]
-            / max(scale["seen_path_sec_per_round"][0], 1e-9),
-            2,
-        ),
-        "initial_index_build_sec": scale.get("initial_index_build_sec"),
-    }
-    print(json.dumps(summary), flush=True)
+    print(json.dumps(run(seen_n, n_seeds, cpus, stage_base)), flush=True)
 
 
 if __name__ == "__main__":

@@ -74,7 +74,8 @@ def crawl_pair(spark, tmp_path_factory):
     cat = Catalog(root)
     seed_catalog(spark, cat, seeds)
     results = run_crawl(
-        spark, cat, ROUNDS, n_hosts=N_HOSTS, default_budget=BUDGET, use_bloom=True
+        spark, cat, ROUNDS, n_hosts=N_HOSTS, default_budget=BUDGET,
+        seen_index_min=0,
     )
     st = sim.seed_state(seeds)
     sim_rounds = [

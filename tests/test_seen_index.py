@@ -12,8 +12,6 @@ size, not corpus lifetime.
   producing byte-identical crawl results to the plain layout.
 """
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from oa_spider_spark import datagen
@@ -34,9 +32,10 @@ from oa_spider_spark.tables import SCALE_LAYOUT, Catalog
 def _crawl(spark, root, rounds=3, bucketed=None, **kw):
     cat = Catalog(root, bucketed=bucketed)
     seed_catalog(spark, cat, datagen.seed_frontier_rows(2500, n_hosts=10))
-    # force index maintenance at toy corpus size (the "auto" default
-    # skips it below the SEEN_INDEX_MIN breakeven — tested separately)
-    kw.setdefault("maintain_bloom", True)
+    # build the index from round 0 at toy corpus size (the default
+    # threshold skips it below the SEEN_INDEX_MIN breakeven — tested
+    # separately)
+    kw.setdefault("seen_index_min", 0)
     res = run_crawl(spark, cat, rounds, n_hosts=10, default_budget=250, **kw)
     return cat, res
 
@@ -81,11 +80,20 @@ def test_stale_index_is_discarded(spark, tmp_path):
     superset) — read_bloom_index must return None, never the stale one."""
     cat, _ = _crawl(spark, tmp_path / "cat", rounds=2)
     assert read_bloom_index(spark, cat) is not None
-    # round 2 commits seen WITHOUT maintaining the index
-    run_round(spark, cat, 2, n_hosts=10, default_budget=250, maintain_bloom=False)
+    # round 2 commits seen rows WITHOUT maintaining the index, the way a
+    # bulk load of seen URLs commits them
+    extra = spark.range(50).select(
+        F.xxhash64(F.concat(F.lit("bulk:"), F.col("id"))).alias("url_hash"),
+        F.concat(F.lit("https://bulk.example/x/"), F.col("id")).alias("url_canon"),
+        F.lit("ok").alias("status"),
+        F.lit(2).alias("round_seen"),
+    )
+    cat.commit_round(
+        2, {"seen": [cat.stage(extra, "seen", 2)]}, counts={"seen": 50}
+    )
     assert read_bloom_index(spark, cat) is None
     # the next maintained round detects staleness and rebuilds in full
-    run_round(spark, cat, 3, n_hosts=10, default_budget=250, maintain_bloom=True)
+    run_round(spark, cat, 3, n_hosts=10, default_budget=250, seen_index_min=0)
     shards, meta = read_bloom_index(spark, cat)
     seen_keys = cat.read(spark, "seen").select("url_hash")
     assert meta.n_items == seen_keys.count()
@@ -120,13 +128,12 @@ def test_capacity_overflow_triggers_geometric_rebuild(spark, tmp_path, monkeypat
 def test_auto_maintenance_skips_below_breakeven_then_builds_at_crossing(
     spark, tmp_path
 ):
-    """maintain_bloom="auto" (the default): no shard upkeep while the
-    corpus is below the breakeven (the auto PROBE takes the plain
-    left_anti there, so shards would be dead weight — VERDICT r04 item
-    2), first build exactly when cumulative seen crosses the threshold,
-    kept fresh every round thereafter; crawl results identical to the
-    forced-maintenance run throughout."""
-    forced_cat, forced = _crawl(spark, tmp_path / "forced")  # True via _crawl
+    """`seen_index_min`: no shard upkeep while the corpus is below the
+    threshold (the round takes the plain left_anti there, so shards
+    would be dead weight — VERDICT r04 item 2), first build exactly when
+    cumulative seen crosses it, kept fresh every round thereafter; crawl
+    results identical to the run maintained from round 0 throughout."""
+    forced_cat, forced = _crawl(spark, tmp_path / "forced")  # threshold 0
     cat = Catalog(tmp_path / "auto")
     seed_catalog(spark, cat, datagen.seed_frontier_rows(2500, n_hosts=10))
     r0 = run_round(
@@ -143,14 +150,14 @@ def test_auto_maintenance_skips_below_breakeven_then_builds_at_crossing(
     idx = read_bloom_index(spark, cat)
     assert idx is not None
     assert idx[1].n_items == cat.read(spark, "seen").count()
-    # once the index exists, auto keeps it fresh even when the threshold
+    # once the index exists, the round keeps it fresh even when the threshold
     # says skip — a skipped update would strand it stale
     r2 = run_round(
         spark, cat, 2, n_hosts=10, default_budget=250, seen_index_min=10**9
     )
     idx2 = read_bloom_index(spark, cat)
     assert idx2 is not None and idx2[1].n_items == cat.read(spark, "seen").count()
-    # the policy is pure bookkeeping: identical crawl to forced maintenance
+    # the policy is pure bookkeeping: identical crawl to the round-0 index
     assert [
         (r.selected, r.fetched_ok, r.retried, r.failed, r.new_links)
         for r in (r0, r1, r2)
@@ -160,6 +167,34 @@ def test_auto_maintenance_skips_below_breakeven_then_builds_at_crossing(
     ]
     assert sorted(map(tuple, cat.read(spark, "seen").collect())) == sorted(
         map(tuple, forced_cat.read(spark, "seen").collect())
+    )
+
+
+def test_fresh_index_gates_the_probe(spark, tmp_path, monkeypatch):
+    """One rule: an index the round keeps fresh is the index the next
+    round probes through, whatever the seen count. With the threshold at
+    0, round 0 builds the index and round 1 must probe it; the crawl is
+    identical to the default-threshold run, which never builds one."""
+    import oa_spider_spark.frontier.seen as seen_mod
+
+    def crawl(root, **kw):
+        cat = Catalog(root)
+        seed_catalog(spark, cat, datagen.seed_frontier_rows(2500, n_hosts=10))
+        res = run_crawl(spark, cat, 2, n_hosts=10, default_budget=250, **kw)
+        return cat, res
+
+    base_cat, base = crawl(tmp_path / "default")
+    assert read_bloom_index(spark, base_cat) is None
+    probes = []
+    real = seen_mod.mark_maybe_seen
+    monkeypatch.setattr(
+        seen_mod, "mark_maybe_seen", lambda *a: probes.append(1) or real(*a)
+    )
+    cat, res = crawl(tmp_path / "indexed", seen_index_min=0)
+    assert len(probes) >= 1
+    assert res == base
+    assert sorted(map(tuple, cat.read(spark, "seen").collect())) == sorted(
+        map(tuple, base_cat.read(spark, "seen").collect())
     )
 
 
@@ -306,7 +341,7 @@ def test_full_scale_stack_crawl_equivalence(spark, tmp_path):
     seed_catalog(spark, cat, datagen.seed_frontier_rows(2500, n_hosts=10))
     res = run_crawl(
         spark, cat, 3, n_hosts=10, default_budget=250,
-        compact_every=1, maintain_bloom=True, use_bloom=True,
+        compact_every=1, seen_index_min=0,
     )
     assert [
         (r.selected, r.fetched_ok, r.retried, r.failed, r.new_links) for r in plain
@@ -336,84 +371,3 @@ def test_full_scale_stack_crawl_equivalence(spark, tmp_path):
         assert "Exchange" not in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-@pytest.mark.parametrize("n_buckets,n_keys", [(8, 40), (8, 64), (16, 80), (64, 300)])
-def test_cuckoo_overfull_table_keeps_every_key(n_buckets, n_keys):
-    """An eviction walk that runs out of MAX_KICKS must leave every
-    already-inserted fingerprint in place and stash the NEW key: no
-    false negatives even when the table is overfull, and every key
-    holds exactly one slot or one stash entry (signed, like url_hash)."""
-    from oa_spider_spark.frontier.cuckoo import BUCKET_SLOTS, _derive, _insert_all
-
-    keys = np.random.default_rng(7).integers(
-        np.iinfo(np.int64).min, np.iinfo(np.int64).max, n_keys, dtype=np.int64
-    )
-    table = np.zeros((n_buckets, BUCKET_SLOTS), dtype=np.uint16)
-    stash = _insert_all(table, keys.view(np.uint64), n_buckets)
-    fp, i1, i2 = _derive(keys.view(np.uint64), n_buckets)
-    hit = (
-        (table[i1] == fp[:, None]).any(axis=1)
-        | (table[i2] == fp[:, None]).any(axis=1)
-        | np.isin(keys, np.array(stash, dtype=np.int64))
-    )
-    assert int((~hit).sum()) == 0
-    assert int((table != 0).sum()) + len(stash) == n_keys
-
-
-def test_cuckoo_filter_insert_probe_delete(spark):
-    """X150: the deletable seen-index twin. Zero false negatives for
-    inserted keys; low false-positive rate on fresh keys; revoked keys
-    become absent again (modulo fingerprint collisions, the safe
-    direction) while every still-inserted key stays present; shard
-    blobs are byte-deterministic."""
-    import hashlib
-
-    from oa_spider_spark.frontier.cuckoo import (
-        build_cuckoo_shards,
-        cuckoo_params,
-        delete_cuckoo,
-        probe_cuckoo,
-    )
-
-    def h64(s):
-        v = int(hashlib.md5(str(s).encode()).hexdigest()[:16], 16)
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    n_shards = 8
-    inserted = [h64(f"in{i}") for i in range(2000)]
-    fresh = [h64(f"out{i}") for i in range(2000)]
-    nb = cuckoo_params(2000 // n_shards + 64)
-    keys = spark.createDataFrame([(x,) for x in inserted], "url_hash long")
-    shards = build_cuckoo_shards(keys, n_shards, nb)
-    # determinism: identical key set -> identical blobs
-    b1 = {r["shard"]: (r["table"], r["stash"]) for r in shards.collect()}
-    b2 = {
-        r["shard"]: (r["table"], r["stash"])
-        for r in build_cuckoo_shards(keys, n_shards, nb).collect()
-    }
-    assert b1 == b2
-    rows = spark.createDataFrame(
-        [(x,) for x in inserted + fresh], "url_hash long"
-    )
-    got = {
-        r["url_hash"]: r["maybe_seen"]
-        for r in probe_cuckoo(rows, shards, n_shards, nb).collect()
-    }
-    assert all(got[x] for x in inserted)  # no false negatives
-    fp_rate = sum(got[x] for x in fresh) / len(fresh)
-    assert fp_rate < 0.05
-    # revoke 500
-    revoked = inserted[:500]
-    kept = inserted[500:]
-    shards2 = delete_cuckoo(
-        shards, spark.createDataFrame([(x,) for x in revoked], "url_hash long"),
-        n_shards, nb,
-    )
-    got2 = {
-        r["url_hash"]: r["maybe_seen"]
-        for r in probe_cuckoo(rows, shards2, n_shards, nb).collect()
-    }
-    assert all(got2[x] for x in kept)  # deletions never harm others
-    still = sum(got2[x] for x in revoked)
-    assert still <= 5  # only fp-collision survivors may linger

@@ -460,11 +460,11 @@ def test_streaming_maintains_persisted_bloom_index(spark, tmp_path):
     df.limit(80).write.parquet(f"{in_dir}/b0")
     df.write.parquet(f"{in_dir}/b1")
     cat = Catalog(tmp_path / "cat")
-    # maintain_bloom=True forces maintenance at toy corpus size (the
-    # "auto" default skips it below the SEEN_INDEX_MIN breakeven)
+    # seen_index_min=0 builds the index at toy corpus size (the default
+    # threshold skips it below the SEEN_INDEX_MIN breakeven)
     q = streaming_crawl(
         spark, cat, in_dir + "/*", ckpt, n_hosts=5, default_budget=40,
-        maintain_bloom=True,
+        seen_index_min=0,
     )
     q.awaitTermination(180)
     idx = read_bloom_index(spark, cat)
