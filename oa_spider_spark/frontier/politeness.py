@@ -151,13 +151,18 @@ def budget_and_order(
     the two cell-level windows; there is NO driver collect (scale-safe at
     10^6 hosts: the (host,_b) join is a plain equi-join Catalyst sizes
     itself). Ordering is bit-identical to the unfused pipeline — the
-    equivalence suite pins it against the sequential simulator."""
+    equivalence suite pins it against the sequential simulator. A row
+    with a NULL host has no host budget and is never selected."""
     from pyspark import StorageLevel
 
     inp = df.persist(StorageLevel.MEMORY_AND_DISK)
+    # dropped once, before the cell counts: a NULL-host cell counted in
+    # the takes (and so in the offsets) but never joined back, leaving a
+    # gap in fetch_order
+    hosted = inp.filter(F.col("host").isNotNull())
     bucket = F.least(F.greatest(F.lit(99) - F.col("priority"), F.lit(0)), F.lit(99))
 
-    cnts = inp.groupBy(F.col("host"), bucket.alias("_b")).agg(
+    cnts = hosted.groupBy(F.col("host"), bucket.alias("_b")).agg(
         F.count("*").alias("_n"), F.max("budget_per_round").alias("_bud")
     )
     budget = F.coalesce(F.col("_bud"), F.lit(default_budget)).cast("long")
@@ -179,7 +184,7 @@ def budget_and_order(
     w_cell = Window.partitionBy("host", "_b").orderBy(*order_cols())
     w_bucket = Window.partitionBy("_b").orderBy(*order_cols())
     out = (
-        inp.withColumn("_b", bucket)
+        hosted.withColumn("_b", bucket)
         .join(takes, ["host", "_b"])
         .withColumn("_hr", F.row_number().over(w_cell))
         .filter(F.col("_hr") <= F.col("_take"))

@@ -55,6 +55,7 @@ FRONTIER_DDL = (
     "priority int, created_ms long, depth int, attempt int, round_added int"
 )
 FRONTIER_COLS = [field.split()[0] for field in FRONTIER_DDL.split(", ")]
+SEEN_DDL = "url_hash long, url_canon string, status string, round_seen int"
 
 
 def normalize_frontier(spark: SparkSession, rows: list[dict], round_added: int = 0) -> DataFrame:
@@ -76,12 +77,14 @@ def dedup_frontier(frontier: DataFrame) -> DataFrame:
     """One row per url_hash; the highest-(attempt, round_added, priority)
     row wins so a URL re-queued for retry carries its attempt count (T2).
 
-    groupBy + max_by, not a row_number window: the hash aggregate gets
-    map-side partial aggregation (duplicates collapse before the shuffle)
-    and skips the per-group sort — at 10^10 frontier rows this is the
-    round's biggest shuffle. Remaining ties are exact duplicates (equal
-    url_hash ⇒ equal url ⇒ every derived column equal), so max_by's
-    arbitrary pick is still deterministic row-content-wise."""
+    groupBy + max_by, not a row_number window: the aggregate runs a
+    partial max_by on the map side, so duplicates collapse before the
+    shuffle — at 10^10 frontier rows this is the round's biggest shuffle.
+    It executes as a SortAggregate (sort by url_hash, then aggregate) on
+    both sides of the exchange, not a HashAggregate: max_by over a struct
+    holding strings has no fixed-width buffer. Remaining ties are exact
+    duplicates (equal url_hash ⇒ equal url ⇒ every derived column equal),
+    so max_by's arbitrary pick is still deterministic row-content-wise."""
     cols = frontier.columns
     key = F.struct(F.col("attempt"), F.col("round_added"), F.col("priority"))
     rest = [c for c in cols if c != "url_hash"]
@@ -204,11 +207,12 @@ def run_round(
             _t0 = now
 
     requeue_backlog = frontier is not None
+    # known schemas: no parquet schema-inference job per read
     if frontier is None:
-        frontier = catalog.read(spark, "frontier")
+        frontier = catalog.read(spark, "frontier", schema=FRONTIER_DDL)
     if frontier is None:
         raise ValueError("frontier is empty — seed it before round 0")
-    seen = catalog.read(spark, "seen")
+    seen = catalog.read(spark, "seen", schema=SEEN_DDL)
 
     # --- selection (all JVM-side, ahead of the opaque fetch stage) -------
     # The persisted Bloom index (maintained below, per-round OR of the
@@ -398,11 +402,11 @@ def compact_frontier(spark: SparkSession, catalog: Catalog, round_id: int) -> No
     On the bucketed layout the rewrite is also the re-cluster: the
     compacted snapshot lands sorted into url_hash buckets, keeping the
     zero-exchange selection plan."""
-    frontier = catalog.read(spark, "frontier")
+    frontier = catalog.read(spark, "frontier", schema=FRONTIER_DDL)
     if frontier is None:
         return
     compacted = dedup_frontier(frontier)
-    seen = catalog.read(spark, "seen")
+    seen = catalog.read(spark, "seen", schema=SEEN_DDL)
     if seen is not None:
         compacted = compacted.join(seen.select("url_hash"), "url_hash", "left_anti")
     path = catalog.stage(compacted, "frontier", round_id)

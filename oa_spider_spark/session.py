@@ -39,9 +39,28 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # One crawl round generates ~100 classes (108 cold on a 400-seed
+        # round); the static default of 100 cache entries thrashed, so a
+        # repeated round re-ran 62-100 Janino compiles (4-vCPU VM). 2000
+        # holds the round with headroom; as a static SparkConf entry it
+        # sizes every executor's cache too.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Keep the codegen stage id out of the generated class name, the
+        # cache key: AQE numbers stages in completion order, so the same
+        # pipeline drew different ids in different rounds and recompiled.
+        # Plans still print the id as `*(N)`.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (Spark's CodegenMetrics);
+    the difference across a job is the classes it could not take from
+    the codegen cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -265,10 +265,18 @@ class Catalog:
         return paths
 
     def read(
-        self, spark: SparkSession, table: str, as_of_round: int | None = None
+        self,
+        spark: SparkSession,
+        table: str,
+        as_of_round: int | None = None,
+        schema: str | None = None,
     ) -> DataFrame | None:
         """Committed rows of `table` (optionally time-traveled). None if
-        the table has no committed snapshots yet."""
+        the table has no committed snapshots yet.
+
+        `schema` (a DDL string) is the table's known schema: a plain
+        parquet read then skips the schema-inference job. Bucketed tables
+        take theirs from the session catalog and ignore it."""
         paths = self.snapshot_paths(table, as_of_round)
         if not paths:
             return None
@@ -280,7 +288,8 @@ class Catalog:
             # earlier ones, whose partitions stay registered for time travel
             t = t.where(t["snap"].isin([os.path.basename(p) for p in paths]))
             return t.drop("snap")
-        return spark.read.parquet(*paths)
+        reader = spark.read.schema(schema) if schema else spark.read
+        return reader.parquet(*paths)
 
     def read_latest(
         self, spark: SparkSession, table: str

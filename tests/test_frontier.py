@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from oa_spider_spark import datagen, sim
 from oa_spider_spark.frontier.canon import canonicalize_url, with_url_columns
 from oa_spider_spark.frontier.round import (
+    FRONTIER_DDL,
+    SEEN_DDL,
     normalize_frontier,
     run_crawl,
     run_round,
@@ -185,6 +187,26 @@ def test_round_totals_match_lineage(spark, crawl_pair):
         assert (res.selected, res.fetched_ok, res.retried, res.failed, res.bytes_fetched) == (
             row["selected"], row["ok"], row["retry"], row["failed"], row["bytes"]
         )
+
+
+@pytest.mark.parametrize("table,ddl", [("frontier", FRONTIER_DDL), ("seen", SEEN_DDL)])
+def test_known_schema_read_runs_no_job(spark, crawl_pair, table, ddl):
+    """run_round reads frontier and seen with their DDL: the same rows and
+    types as the inferred read, without its schema-inference job."""
+    cat, *_ = crawl_pair
+    sc = spark.sparkContext
+    reads, job_ids = {}, {}
+    try:
+        for label, schema in (("known", ddl), ("inferred", None)):
+            group = f"read_{table}_{label}"
+            sc.setJobGroup(group, group)
+            reads[label] = cat.read(spark, table, schema=schema)
+            job_ids[label] = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not job_ids["known"] and job_ids["inferred"], job_ids
+    assert reads["known"].dtypes == reads["inferred"].dtypes
+    assert sorted(reads["known"].collect()) == sorted(reads["inferred"].collect())
 
 
 def test_empty_selection_returns_zero_totals(spark, tmp_path):

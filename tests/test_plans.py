@@ -12,8 +12,10 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from oa_spider_spark import datagen
-from oa_spider_spark.frontier.politeness import global_order_and_limit
-from oa_spider_spark.frontier.round import dedup_frontier
+from oa_spider_spark.frontier.politeness import budget_and_order, global_order_and_limit
+from oa_spider_spark.frontier.round import dedup_frontier, run_round, seed_catalog
+from oa_spider_spark.session import codegen_compiles
+from oa_spider_spark.tables import Catalog
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -94,8 +96,9 @@ def test_global_order_total_rank_is_correct(spark):
 
 
 def test_dedup_frontier_is_partial_aggregate_not_window(spark):
-    """dedup_frontier must compile to hash aggregates (map-side partial
-    combine) rather than a sort-based row_number window."""
+    """dedup_frontier must compile to a partial + final aggregate
+    (map-side combine before the shuffle) rather than a row_number
+    window."""
     f = datagen.seed_frontier_df(spark, 300, n_hosts=5, hot_share=0.3)
     out = dedup_frontier(f)
     out.collect()
@@ -124,7 +127,7 @@ def test_budget_and_order_matches_unfused_pipeline(spark):
     apply_budget → global_order_and_limit, and its data windows must be
     partitioned by the (host, bucket)/(bucket) cells — the hot host's
     backlog must never be sorted in one task."""
-    from oa_spider_spark.frontier.politeness import apply_budget, budget_and_order
+    from oa_spider_spark.frontier.politeness import apply_budget
 
     f = datagen.seed_frontier_df(spark, 3000, n_hosts=6, hot_share=0.5).withColumn(
         "budget_per_round", F.lit(None).cast("int")
@@ -149,6 +152,46 @@ def test_budget_and_order_matches_unfused_pipeline(spark):
     cache = getattr(fused, "_ordered_cache", None)
     if cache is not None:
         cache.unpersist()
+
+
+def test_budget_and_order_null_host_leaves_no_fetch_order_gap(spark):
+    """A NULL-host row has no host budget: it is not selected, and it must
+    not shift the fetch_order of the rows that are."""
+    rows = spark.range(30).select(
+        F.concat(F.lit("http://h"), (F.col("id") % 3).cast("string"), F.lit(".example.org/doc/"),
+                 F.col("id").cast("string")).alias("url"),
+        F.concat(F.lit("h"), (F.col("id") % 3).cast("string"), F.lit(".example.org")).alias("host"),
+        (F.col("id") % 50).cast("int").alias("priority"),
+        (F.lit(1_600_000_000_000) + F.col("id")).alias("created_ms"),
+        F.lit("doc").alias("kind"),
+        F.col("id").alias("url_hash"),
+    )
+    null_host = rows.limit(1).select(
+        "url", F.lit(None).cast("string").alias("host"), F.lit(99).alias("priority"),
+        "created_ms", "kind", F.lit(1000).cast("long").alias("url_hash"),
+    )
+    f = rows.unionByName(null_host).withColumn("budget_per_round", F.lit(None).cast("int"))
+    out = budget_and_order(f, 5)
+    got = out.select("host", "fetch_order").collect()
+    out._ordered_cache.unpersist()
+    assert all(r["host"] is not None for r in got)
+    assert sorted(r["fetch_order"] for r in got) == list(range(1, 16))
+
+
+def test_repeated_round_compiles_no_classes(spark, tmp_path):
+    """The crawl round's generated classes fit the codegen cache: the same
+    round (same seeds, same round id) on a second fresh catalog runs no
+    Janino compile. A round that outgrows the cache recompiles dozens of
+    classes every time it runs."""
+    seeds = datagen.seed_frontier_rows(400, n_hosts=10, hot_share=0.4)
+    added = []
+    for name in ("first", "second"):
+        cat = Catalog(tmp_path / name)
+        seed_catalog(spark, cat, seeds)
+        before = codegen_compiles(spark)
+        run_round(spark, cat, 0, n_hosts=10, default_budget=25)
+        added.append(codegen_compiles(spark) - before)
+    assert added[1] == 0, f"compiles per run: {added}"
 
 
 def test_attachments_join_is_hash_join_not_nested_loop(spark):
