@@ -115,7 +115,7 @@ def main() -> None:
 
     probe_before = capacity_probe(cpus)
 
-    from oa_spider_spark.session import codegen_compiles, get_spark
+    from oa_spider_spark.session import get_spark
 
     # Event logging feeds the engine-side scaling metric (stage pareff/
     # skew) computed below — host-noise-free evidence alongside the
@@ -243,7 +243,6 @@ def main() -> None:
         cat = Catalog(root)
         seed_catalog(spark, cat, datagen.seed_frontier_df(
             spark, n_seeds, n_hosts=n_hosts, hot_share=0.4, partitions=cpus * 2))
-        compiles0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         crawl_t0_epoch_ms = time.time() * 1000
         phases: dict[str, float] = {}
@@ -255,7 +254,6 @@ def main() -> None:
         )
         crawl_sec = time.perf_counter() - t0
         crawl_t1_epoch_ms = time.time() * 1000
-        crawl_compiles = codegen_compiles(spark) - compiles0
     timings["crawl_round"] = round(crawl_sec, 3)
     throughput = {
         "frontier_urls_per_sec": round(res.selected / crawl_sec, 1),
@@ -356,10 +354,6 @@ def main() -> None:
                 # staging write; derived_stage = links/retries/seen/
                 # lineage writes; commit = the commit-log append)
                 "crawl_phases": phases,
-                # Janino compiles during the crawl round: the warm round's
-                # classes come from the codegen cache, so only stages AQE
-                # plans differently at the larger round size compile here
-                "codegen_compiles": crawl_compiles,
                 # host-noise-free engine evidence: task-balance of the
                 # crawl round's stages (pareff = engine-side scaling
                 # ceiling; see oa_spider_spark/evlog.py)

@@ -150,9 +150,11 @@ def budget_and_order(
     Everything is JVM window/agg work on ≤100-row metadata frames except
     the two cell-level windows; there is NO driver collect (scale-safe at
     10^6 hosts: the (host,_b) join is a plain equi-join Catalyst sizes
-    itself). Ordering is bit-identical to the unfused pipeline — the
-    equivalence suite pins it against the sequential simulator. A row
-    with a NULL host has no host budget and is never selected."""
+    itself). For rows with a host, ordering is bit-identical to the
+    unfused pipeline — the equivalence suite pins it against the
+    sequential simulator. A row with a NULL host has no host budget and
+    is dropped here, whereas `apply_budget` ranks all NULL hosts as one
+    host."""
     from pyspark import StorageLevel
 
     inp = df.persist(StorageLevel.MEMORY_AND_DISK)

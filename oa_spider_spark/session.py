@@ -12,6 +12,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The engine's settings for any master: get_spark adds the local-mode
+# sizing, scripts/submit_crawl.py applies them under spark-submit.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # One crawl round generates ~100 classes (108 cold on a 400-seed
+    # round, 4-vCPU VM) and the static default of 100 cache entries
+    # thrashed: re-running a round with the same round id and inputs in
+    # the same JVM re-ran 62-100 Janino compiles. 2000 holds it with
+    # headroom. A static entry: it only takes effect if set before the
+    # session starts. Each new round id still compiles ~10 classes
+    # (F.lit(round_id) is inlined into generated code).
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    # Keep the codegen stage id out of the generated class name, the
+    # cache key: AQE numbers stages in completion order, so the same
+    # pipeline drew different ids in different runs and recompiled.
+    # Plans still print the id as `*(N)`.
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
 
 def get_spark(
     cores: int | None = None,
@@ -30,28 +55,10 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # One crawl round generates ~100 classes (108 cold on a 400-seed
-        # round); the static default of 100 cache entries thrashed, so a
-        # repeated round re-ran 62-100 Janino compiles (4-vCPU VM). 2000
-        # holds the round with headroom; as a static SparkConf entry it
-        # sizes every executor's cache too.
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # Keep the codegen stage id out of the generated class name, the
-        # cache key: AQE numbers stages in completion order, so the same
-        # pipeline drew different ids in different rounds and recompiled.
-        # Plans still print the id as `*(N)`.
-        .config("spark.sql.codegen.useIdInClassName", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

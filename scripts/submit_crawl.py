@@ -3,7 +3,8 @@
 spark-submit --py-files on a multi-executor cluster").
 
 The package ships as a zip on --py-files; this driver only parses args,
-builds the session (or inherits the one spark-submit provides), seeds the
+builds the session with the engine's settings (`session.ENGINE_CONF`;
+spark-submit supplies the master), seeds the
 catalog if empty, and runs N rounds with exact resume — rerunning the
 same command after a crash continues from the last committed round.
 
@@ -34,7 +35,14 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("oa_spider_crawl").getOrCreate()
+    from oa_spider_spark.session import ENGINE_CONF
+
+    # set before the session starts, as the static codegen entries need;
+    # builder entries take precedence over the same keys given with --conf
+    builder = SparkSession.builder.appName("oa_spider_crawl")
+    for k, v in ENGINE_CONF.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from oa_spider_spark import datagen
